@@ -417,7 +417,7 @@ FROM events ORDER BY key NULLS FIRST""")),
         try {
           decoys = new graft.sources.replay.KafkaLogClient(
             broker.clientPath,
-            Map("transactional.id" -> "s58-decoy", "graft.role" -> "producer"))
+            Map("transactional.id" -> "s58-decoy"))
           def abortedDecoys(tag: String): Unit = {
             decoys.beginTxn()
             (0 until 3).foreach { p =>
@@ -480,7 +480,7 @@ FROM events ORDER BY key NULLS FIRST""")),
             .select(col("event_id")).orderBy(col("event_id")).limit(64)
             .collect().map(_.getLong(0))
           prod = new graft.sources.replay.KafkaLogClient(broker.clientPath,
-            Map("transactional.id" -> "ctp-gate", "graft.role" -> "producer"))
+            Map("transactional.id" -> "ctp-gate"))
           def transformed(ids: Seq[Long]) = ids.map(id =>
             (null: Array[Byte], s"out $id".getBytes("UTF-8"), id))
           prod.beginTxn()

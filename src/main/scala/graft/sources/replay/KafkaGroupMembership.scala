@@ -6,10 +6,11 @@ import KafkaWire._
 
 /** Client half of the classic consumer-group membership protocol —
   * JoinGroup (api 11) / SyncGroup (api 14) / Heartbeat (api 12) /
-  * LeaveGroup (api 13) — speaking BOTH dialects since round 14 (VERDICT
-  * r13 #1): the pre-flexible v0 pins, and the flexible (KIP-482) versions
-  * (JoinGroup v6, SyncGroup v4, Heartbeat v4, LeaveGroup v4) negotiated
-  * per broker like the rest of the client. This is librdkafka's
+  * LeaveGroup (api 13) — speaking BOTH dialects: the pre-flexible v0 pins,
+  * and the flexible (KIP-482) versions (JoinGroup v6, SyncGroup v4,
+  * Heartbeat v4, LeaveGroup v4) negotiated per broker like the rest of the
+  * client; each request and response is written once through
+  * [[KafkaWire.WireWriter]]/[[KafkaWire.WireReader]]. This is librdkafka's
   * `subscribe()` seam (the reference inherits it but uses manual `assign`,
   * `src/kafka/execution.rs:79`): members of a group get DISJOINT partition
   * assignments computed by an elected leader, and a failed heartbeat is
@@ -133,11 +134,10 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
     mine
   }
 
-  /** One negotiated one-shot to the coordinator; returns (version, resp). */
-  private def call(name: String, api: Short, pinned: Short, flex: Short)
-      (body: Short => Array[Byte]): (Short, DataInputStream) =
-    client.oneShotVersioned(client.coordinator(group), name, api,
-      pinned, flex)(body)
+  /** One negotiated one-shot to the coordinator. */
+  private def call(name: String, api: Short, pinned: Short, flexible: Short)
+      (body: WireWriter => Unit): WireReader =
+    client.call(client.coordinator(group), name, api, pinned, flexible)(body)
 
   /** One full join+sync dance; returns this member's assigned partitions.
     * Retries the named transient outcomes (REBALANCE_IN_PROGRESS while the
@@ -151,49 +151,30 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
       if (attempts > 10)
         throw new IOException(s"kafka group '$group': join did not settle " +
           s"after $attempts attempts")
-      val (jv, jr) = call("JoinGroup", ApiJoinGroup, 0, 6) { v =>
-        // the instance id only rides the FLEXIBLE body this client writes
-        // (v6); guarding at the field's protocol floor (v5) would pass a
-        // version whose body builder silently drops the field
-        if (static && v < 6)
+      val jr = call("JoinGroup", ApiJoinGroup, 0, 6) { w =>
+        // the instance id rides JoinGroup v5+ only: a broker that
+        // negotiated the v0 pin cannot keep a static membership
+        if (static && w.version < 5)
           throw new IOException(s"kafka group '$group': static membership " +
             s"(group.instance.id) needs the flexible JoinGroup dialect " +
-            s"(v6 in this client); negotiation picked v$v")
-        val jb = new ByteArrayOutputStream(); val jo = new DataOutputStream(jb)
-        val md = subscriptionMetadata
-        if (v >= 6) {
-          writeCompactString(jo, group)
-          jo.writeInt(sessionTimeoutMs)
-          jo.writeInt(sessionTimeoutMs) // rebalance_timeout_ms
-          writeCompactString(jo, memberIdV)
-          writeCompactString(jo, instanceIdOrNull) // KIP-345 (null = dynamic)
-          writeCompactString(jo, "consumer")
-          writeCompactArrayLen(jo, 1)
-          writeCompactString(jo, strategy)
-          writeCompactBytes(jo, md)
-          writeEmptyTagged(jo)
-          writeEmptyTagged(jo)
-        } else {
-          writeString(jo, group)
-          jo.writeInt(sessionTimeoutMs)
-          writeString(jo, memberIdV)
-          writeString(jo, "consumer")
-          jo.writeInt(1); writeString(jo, strategy)
-          jo.writeInt(md.length); jo.write(md)
-        }
-        jb.toByteArray
+            s"(v6 in this client); negotiation picked v${w.version}")
+        w.string(group).int32(sessionTimeoutMs)
+        if (w.version >= 1) w.int32(sessionTimeoutMs) // rebalance_timeout_ms
+        w.string(memberIdV)
+        if (w.version >= 5) w.string(instanceIdOrNull) // KIP-345 (null = dynamic)
+        w.string("consumer")
+        w.arrayLen(1).string(strategy).bytes(subscriptionMetadata).tags()
+        w.tags()
       }
-      if (jv >= 6) jr.readInt() // throttle_time_ms
-      val jerr = jr.readShort()
+      if (jr.version >= 2) jr.int32() // throttle_time_ms
+      val jerr = jr.int16()
       if (jerr == 25) { memberIdV = "" } // evicted: rejoin blank
       else if (jerr == 27) { Thread.sleep(50) }
-      else if (jerr == 79 && jv >= 4) {
+      else if (jerr == 79 && jr.version >= 4) {
         // MEMBER_ID_REQUIRED: the broker assigned an id; rejoin with it
-        jr.readInt()            // generation (-1)
-        if (jv >= 6) { readCompactString(jr); readCompactString(jr) }
-        else { readString(jr); readString(jr) } // protocol, leader
-        memberIdV =
-          if (jv >= 6) readCompactString(jr) else readString(jr)
+        jr.int32()              // generation (-1)
+        jr.string(); jr.string() // protocol, leader
+        memberIdV = jr.string()
         if (memberIdV == null || memberIdV.isEmpty)
           throw new IOException(s"kafka JoinGroup answered " +
             s"MEMBER_ID_REQUIRED without a member id for group '$group'")
@@ -206,25 +187,16 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
       else if (jerr != 0)
         throw new IOException(s"kafka JoinGroup error $jerr for group '$group'")
       else {
-        val gen = jr.readInt()
-        if (jv >= 6) readCompactString(jr) else readString(jr) // protocol
-        val leaderId = if (jv >= 6) readCompactString(jr) else readString(jr)
-        val myId = if (jv >= 6) readCompactString(jr) else readString(jr)
-        val nMembers =
-          if (jv >= 6) readCompactArrayLen(jr) else jr.readInt()
-        val memberMeta = (1 to nMembers).map { _ =>
-          if (jv >= 6) {
-            val m = readCompactString(jr)
-            readCompactString(jr)       // group_instance_id
-            val b = readCompactBytes(jr)
-            skipTagged(jr)
-            (m, if (b == null) Array.emptyByteArray else b)
-          } else {
-            val m = readString(jr)
-            val len = jr.readInt()
-            val b = new Array[Byte](math.max(len, 0)); jr.readFully(b)
-            (m, b)
-          }
+        val gen = jr.int32()
+        jr.string()             // protocol_name
+        val leaderId = jr.string()
+        val myId = jr.string()
+        val memberMeta = jr.array {
+          val m = jr.string()
+          if (jr.version >= 5) jr.string() // group_instance_id
+          val b = jr.bytes()
+          jr.tags()
+          (m, if (b == null) Array.emptyByteArray else b)
         }
         memberIdV = myId; generationV = gen; leaderV = leaderId == myId
         // leader computes the assignment over the topic's partitions:
@@ -288,35 +260,16 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
           ao.writeInt(0)        // user_data: empty
           ab.toByteArray
         }
-        val (sv, sr) = call("SyncGroup", ApiSyncGroup, 0, 4) { v =>
-          val sb = new ByteArrayOutputStream(); val so = new DataOutputStream(sb)
-          if (v >= 4) {
-            writeCompactString(so, group)
-            so.writeInt(gen)
-            writeCompactString(so, myId)
-            writeCompactString(so, instanceIdOrNull) // KIP-345
-            writeCompactArrayLen(so, assignments.size)
-            assignments.foreach { case (m, ps) =>
-              writeCompactString(so, m)
-              writeCompactBytes(so, assignmentBytes(ps))
-              writeEmptyTagged(so)
-            }
-            writeEmptyTagged(so)
-          } else {
-            writeString(so, group)
-            so.writeInt(gen)
-            writeString(so, myId)
-            so.writeInt(assignments.size)
-            assignments.foreach { case (m, ps) =>
-              writeString(so, m)
-              val ab = assignmentBytes(ps)
-              so.writeInt(ab.length); so.write(ab)
-            }
+        val sr = call("SyncGroup", ApiSyncGroup, 0, 4) { w =>
+          w.string(group).int32(gen).string(myId)
+          if (w.version >= 3) w.string(instanceIdOrNull) // KIP-345
+          w.array(assignments) { case (m, ps) =>
+            w.string(m).bytes(assignmentBytes(ps)).tags()
           }
-          sb.toByteArray
+          w.tags()
         }
-        if (sv >= 4) sr.readInt() // throttle_time_ms
-        val serr = sr.readShort()
+        if (sr.version >= 1) sr.int32() // throttle_time_ms
+        val serr = sr.int16()
         if (serr == 27 || serr == 22) { Thread.sleep(50) } // window re-opened
         else if (serr == 25) { memberIdV = "" }
         else if (serr == 82)
@@ -327,13 +280,7 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
         else if (serr != 0)
           throw new IOException(s"kafka SyncGroup error $serr for group '$group'")
         else {
-          val assigned =
-            if (sv >= 4) readCompactBytes(sr)
-            else {
-              val alen = sr.readInt()
-              if (alen <= 0) null
-              else { val b = new Array[Byte](alen); sr.readFully(b); b }
-            }
+          val assigned = sr.bytes()
           if (assigned == null || assigned.isEmpty) {
             // a member subscribed past capacity — or, cooperative, a
             // generation in which everything it owned was revoked
@@ -368,23 +315,13 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
     * outcomes (evicted member, stale generation) also answer false after
     * resetting state so the rejoin starts blank. */
   def heartbeat(): Boolean = {
-    val (hv, r) = call("Heartbeat", ApiHeartbeat, 0, 4) { v =>
-      val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-      if (v >= 4) {
-        writeCompactString(o, group)
-        o.writeInt(generationV)
-        writeCompactString(o, memberIdV)
-        writeCompactString(o, instanceIdOrNull) // KIP-345
-        writeEmptyTagged(o)
-      } else {
-        writeString(o, group)
-        o.writeInt(generationV)
-        writeString(o, memberIdV)
-      }
-      bo.toByteArray
+    val r = call("Heartbeat", ApiHeartbeat, 0, 4) { w =>
+      w.string(group).int32(generationV).string(memberIdV)
+      if (w.version >= 3) w.string(instanceIdOrNull) // KIP-345
+      w.tags()
     }
-    if (hv >= 4) r.readInt()    // throttle_time_ms
-    r.readShort() match {
+    if (r.version >= 1) r.int32() // throttle_time_ms
+    r.int16() match {
       case 0 => true
       case 27 => false
       case 22 => false
@@ -401,32 +338,23 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
   /** Clean exit: the coordinator rebalances the remainder immediately. */
   def leave(): Unit = {
     if (memberIdV.isEmpty) return
-    val (lv, r) = call("LeaveGroup", ApiLeaveGroup, 0, 4) { v =>
-      val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-      if (v >= 4) {
-        writeCompactString(o, group)
-        writeCompactArrayLen(o, 1) // members (batched since v3)
-        writeCompactString(o, memberIdV)
-        writeCompactString(o, instanceIdOrNull) // KIP-345
-        writeEmptyTagged(o)
-        writeEmptyTagged(o)
-      } else {
-        writeString(o, group)
-        writeString(o, memberIdV)
-      }
-      bo.toByteArray
+    val r = call("LeaveGroup", ApiLeaveGroup, 0, 4) { w =>
+      w.string(group)
+      if (w.version >= 3) {     // members (batched since v3)
+        w.arrayLen(1).string(memberIdV)
+        w.string(instanceIdOrNull).tags() // KIP-345
+      } else w.string(memberIdV)
+      w.tags()
     }
-    if (lv >= 4) r.readInt()    // throttle_time_ms
-    val e = r.readShort()
-    if (lv >= 4 && e == 0) {
-      val n = readCompactArrayLen(r)
-      (1 to n).foreach { _ =>
-        readCompactString(r); readCompactString(r)
-        val me = r.readShort(); skipTagged(r)
-        if (me != 0 && me != 25)
-          throw new IOException(
-            s"kafka LeaveGroup member error $me for group '$group'")
-      }
+    if (r.version >= 1) r.int32() // throttle_time_ms
+    val e = r.int16()
+    if (r.version >= 3 && e == 0) r.array {
+      r.string(); r.string()    // member_id, group_instance_id
+      val me = r.int16()
+      r.tags()
+      if (me != 0 && me != 25)
+        throw new IOException(
+          s"kafka LeaveGroup member error $me for group '$group'")
     }
     if (e != 0 && e != 25)
       throw new IOException(s"kafka LeaveGroup error $e for group '$group'")

@@ -4,14 +4,15 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream
 import java.net.{ServerSocket, Socket}
 
 /** Wire-faithful single-node Kafka broker double for [[KafkaLogClient]]:
-  * speaks the exact protocol subset the client consumes — Metadata v0 AND
-  * the flexible (KIP-482) v9, ListOffsets v1/v2 AND the flexible v6,
-  * Fetch v4 AND the flexible v12 with RecordBatch v2, ApiVersions v0 AND
-  * the flexible v3, Produce v3 AND the flexible v9
-  * (+CRC-32C verification and idempotent-producer sequence absorption,
-  * shared verbatim between both Produce envelopes),
-  * InitProducerId v0 — serving one
-  * topic from a file-backed [[ReplayLog]] directory. Lives in MAIN scope
+  * speaks the exact protocol subset the client consumes, in BOTH dialects
+  * negotiated per API — each API's pinned pre-flexible version and its
+  * flexible (KIP-482) one (e.g. Metadata v0/v9, ListOffsets v1/v2/v6,
+  * Fetch v4/v12, ApiVersions v0/v3, Produce v3/v9, InitProducerId v0/v2),
+  * each request parsed and each response written once through
+  * [[KafkaWire.WireReader]]/[[KafkaWire.WireWriter]] — plus CRC-32C
+  * verification and idempotent-producer sequence absorption on produce —
+  * serving one topic from a file-backed [[ReplayLog]] directory. Lives in
+  * MAIN scope
   * (like [[SocketLogServer]], the socket backend's double) so the declared
   * registry queries s56/s57 can run the kafka wire client and the produce
   * sink through the driver's DuckDB correctness gate, not just the specs;
@@ -27,9 +28,9 @@ import java.net.{ServerSocket, Socket}
   * records section exactly as the official producers do, so the client's
   * decompression path is exercised against real codec framings.
   *
-  * CRC is written as 0 — the consumer-side client does not verify it (as
-  * documented on KafkaLogClient); everything else is encoded per the public
-  * protocol spec. Timestamps are milliseconds on the wire, so the ReplayLog's
+  * Every RecordBatch v2 it serves (file-backed base log and produced
+  * tail alike) comes from [[KafkaWire.encodeRecordBatchV2]], the encoder
+  * the producer uses, so it carries a real CRC-32C. Timestamps are milliseconds on the wire, so the ReplayLog's
   * µs event times truncate to ms — exactly what a real broker round-trip
   * does.
   */
@@ -442,15 +443,10 @@ final class KafkaLogServer(dir: String, topic: String,
         val size = in.readInt()
         val req = new Array[Byte](size)
         in.readFully(req)
-        val r = new DataInputStream(new java.io.ByteArrayInputStream(req))
-        val apiKey = r.readShort()
-        val apiVersion = r.readShort()
-        val correlationId = r.readInt()
-        readString(r) // client id
-        // flexible (KIP-482) requests use header v2: the tagged-field
-        // buffer follows client_id
-        val flex = isFlexible(apiKey, apiVersion)
-        if (flex) skipTagged(r)
+        val frame = new DataInputStream(new java.io.ByteArrayInputStream(req))
+        val (apiKey, apiVersion, correlationId) = readRequestHeader(frame)
+        val r = new WireReader(frame, apiKey, apiVersion)
+        val o = new WireWriter(apiKey, apiVersion)
         // KIP-368 enforcement: past the session lifetime only the re-auth
         // sequence (and ApiVersions) is served; anything else kills the
         // connection, exactly a real broker with connections.max.reauth.ms
@@ -460,130 +456,101 @@ final class KafkaLogServer(dir: String, topic: String,
             apiKey != ApiApiVersions)
           throw new IOException("fake broker: SASL session lifetime " +
             "exceeded without re-authentication (KIP-368)")
-        val body = apiKey match {
+        apiKey match {
           case ApiSaslHandshake if apiVersion == 1 =>
-            val mech = readString(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
+            val mech = r.string()
             val mechOk = saslMechs.contains(mech) &&
               (if (mech == "OAUTHBEARER") oauthToken.isDefined else sasl.isDefined)
-            if (mechOk) {
-              mechanism = mech
-              o.writeShort(0)
-            } else o.writeShort(33)     // UNSUPPORTED_SASL_MECHANISM
-            o.writeInt(saslMechs.size); saslMechs.foreach(writeString(o, _))
-            bo.toByteArray
+            if (mechOk) mechanism = mech
+            o.int16(if (mechOk) 0 else 33) // 33: UNSUPPORTED_SASL_MECHANISM
+            o.array(saslMechs)(o.string)
           case ApiSaslAuthenticate if apiVersion == 0 || apiVersion == 1 =>
             if (mechanism == null)
               throw new IOException("fake broker: authenticate before handshake")
-            val n = r.readInt()
-            val tok = new Array[Byte](n); r.readFully(tok)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (mechanism == "PLAIN") {
-              val parts = new String(tok, "UTF-8").split("\u0000", -1)
-              val ok = parts.length == 3 &&
-                sasl.contains((parts(1), parts(2)))
-              if (ok) {
-                markAuthed()
-                o.writeShort(0); o.writeShort(-1)  // no error message
+            val tok = r.bytes()
+            // (error, error message, auth_bytes): 58 = SASL_AUTHENTICATION_FAILED
+            val (err, msg, reply): (Int, String, Array[Byte]) =
+              if (mechanism == "PLAIN") {
+                val parts = new String(tok, "UTF-8").split("\u0000", -1)
+                if (parts.length == 3 && sasl.contains((parts(1), parts(2)))) {
+                  markAuthed()
+                  (0, null, Array.emptyByteArray)
+                } else (58, "Authentication failed: invalid credentials",
+                  Array.emptyByteArray)
+              } else if (mechanism == "OAUTHBEARER") {
+                val msg = new String(tok, "UTF-8")
+                if (oauthErrJson != null) {
+                  // the post-challenge dummy %x01 leg → named failure
+                  val json = oauthErrJson
+                  oauthErrJson = null
+                  (58, json, Array.emptyByteArray)
+                } else {
+                  val Bearer = "n,,\u0001auth=Bearer (.+)\u0001\u0001".r
+                  msg match {
+                    case Bearer(t) if oauthToken.contains(t) =>
+                      markAuthed()
+                      (0, null, Array.emptyByteArray) // success: empty auth_bytes
+                    case _ =>
+                      // RFC 7628 error JSON rides as a CHALLENGE (error 0)
+                      oauthErrJson = """{"status":"invalid_token"}"""
+                      (0, null, oauthErrJson.getBytes("UTF-8"))
+                  }
+                }
               } else {
-                o.writeShort(58)        // SASL_AUTHENTICATION_FAILED
-                writeString(o, "Authentication failed: invalid credentials")
-              }
-              o.writeInt(0)             // empty auth_bytes
-            } else if (mechanism == "OAUTHBEARER") {
-              val msg = new String(tok, "UTF-8")
-              if (oauthErrJson != null) {
-                // the post-challenge dummy %x01 leg → named failure
-                o.writeShort(58)        // SASL_AUTHENTICATION_FAILED
-                writeString(o, oauthErrJson)
-                o.writeInt(0)
-                oauthErrJson = null
-              } else {
-                val Bearer = "n,,\u0001auth=Bearer (.+)\u0001\u0001".r
-                msg match {
-                  case Bearer(t) if oauthToken.contains(t) =>
-                    markAuthed()
-                    o.writeShort(0); o.writeShort(-1)
-                    o.writeInt(0)       // success: empty auth_bytes
-                  case _ =>
-                    // RFC 7628 error JSON rides as a CHALLENGE (error 0)
-                    oauthErrJson = """{"status":"invalid_token"}"""
-                    o.writeShort(0); o.writeShort(-1)
-                    val eb = oauthErrJson.getBytes("UTF-8")
-                    o.writeInt(eb.length); o.write(eb)
+                val (reply, done, err) = scramLeg(new String(tok, "UTF-8"))
+                scramState = if (done || err != null) null else scramState
+                if (err != null) (58, err, Array.emptyByteArray)
+                else {
+                  if (done) markAuthed()
+                  (0, null, reply.getBytes("UTF-8"))
                 }
               }
-            } else {
-              val (reply, done, err) =
-                scramLeg(new String(tok, "UTF-8"))
-              scramState = if (done || err != null) null else scramState
-              if (err != null) {
-                o.writeShort(58)        // SASL_AUTHENTICATION_FAILED
-                writeString(o, err)
-                o.writeInt(0)
-              } else {
-                if (done) markAuthed()
-                o.writeShort(0); o.writeShort(-1)
-                val rb = reply.getBytes("UTF-8")
-                o.writeInt(rb.length); o.write(rb)
-              }
-            }
+            o.int16(err).string(msg).bytes(reply)
             // KIP-368: v1+ responses carry session_lifetime_ms (0 = the
             // broker does not require re-authentication)
-            if (apiVersion >= 1) o.writeLong(maxReauthMs)
-            bo.toByteArray
-          case ApiApiVersions if apiVersion == 0 =>
+            if (apiVersion >= 1) o.int64(maxReauthMs)
+          case ApiApiVersions if apiVersion == 0 || apiVersion == 3 =>
             // served pre-auth, like real brokers (clients use it to
             // negotiate the SASL handshake version)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeShort(apiVersionsError)
-            if (apiVersionsError == 0) {
-              o.writeInt(apiRanges.size)
-              apiRanges.foreach { case (k, lo, hi) =>
-                o.writeShort(k); o.writeShort(lo); o.writeShort(hi)
-              }
-            } else o.writeInt(0)
-            bo.toByteArray
-          case ApiApiVersions if apiVersion == 3 =>
-            // the flexible form (compact array + per-key and trailing
-            // tagged buffers, throttle_time_ms after the array); request
-            // body = client_software_name/version + tags
-            readCompactString(r); readCompactString(r); skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeShort(apiVersionsError)
-            if (apiVersionsError == 0) {
-              writeCompactArrayLen(o, apiRanges.size)
-              apiRanges.foreach { case (k, lo, hi) =>
-                o.writeShort(k); o.writeShort(lo); o.writeShort(hi)
-                writeEmptyTagged(o)
-              }
-            } else writeCompactArrayLen(o, 0)
-            o.writeInt(0)                  // throttle_time_ms
-            writeEmptyTagged(o)
-            bo.toByteArray
+            if (apiVersion >= 3) { r.string(); r.string() } // client software
+            r.tags()
+            o.int16(apiVersionsError)
+            o.array(if (apiVersionsError == 0) apiRanges else Nil) {
+              case (k, lo, hi) => o.int16(k).int16(lo).int16(hi).tags()
+            }
+            if (apiVersion >= 1) o.int32(0) // throttle_time_ms
+            o.tags()
           case _ if !authed =>
             // real brokers kill the connection on pre-auth API use
             throw new IOException(
               s"fake broker: api $apiKey before SASL authentication")
-          case ApiProduce if apiVersion == 3 =>
-            val txnId = readString(r)   // transactional_id (nullable)
-            r.readShort(); r.readInt()  // acks, timeout_ms
-            val nTopics = r.readInt()
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(nTopics)
-            (1 to nTopics).foreach { _ =>
-              val name = readString(r)
-              val nParts = r.readInt()
-              writeString(o, name)
-              o.writeInt(nParts)
-              (1 to nParts).foreach { _ =>
-                val p = r.readInt()
-                val len = r.readInt()
-                val rs = new Array[Byte](len); r.readFully(rs)
-                val (err, baseOff) = produceAppend(txnId, name, p, rs)
-                o.writeInt(p); o.writeShort(err); o.writeLong(baseOff)
-                o.writeLong(-1L)        // log_append_time: create-time batch
+          case ApiProduce if apiVersion == 3 || apiVersion == 9 =>
+            val txnId = r.string()      // transactional_id (nullable)
+            r.int16(); r.int32()        // acks, timeout_ms
+            val topics = r.array {
+              val name = r.string()
+              val parts = r.array {
+                val p = r.int32(); val rs = r.bytes(); r.tags()
+                (p, rs)
               }
+              r.tags()
+              (name, parts)
+            }
+            r.tags()
+            o.array(topics) { case (name, parts) =>
+              o.string(name)
+              o.array(parts) { case (p, rs) =>
+                // the append path (CRC check, idempotence, txn gating,
+                // offset assignment) is dialect-free: produceAppend
+                val (err, baseOff) = produceAppend(txnId, name, p, rs)
+                o.int32(p).int16(err).int64(baseOff)
+                o.int64(-1L)            // log_append_time: create-time batch
+                if (apiVersion >= 5) o.int64(0L) // log_start_offset
+                if (apiVersion >= 8)    // record_errors, error_message
+                  o.arrayLen(0).string(null)
+                o.tags()
+              }
+              o.tags()
             }
             if (dropProduceResponses > 0) {
               // ambiguous-failure injection: the append above HAPPENED but
@@ -592,52 +559,12 @@ final class KafkaLogServer(dir: String, topic: String,
               dropProduceResponses -= 1
               throw new EOFException("fake broker: produce response dropped")
             }
-            o.writeInt(0)               // throttle_time_ms (tails Produce)
-            bo.toByteArray
-          case ApiProduce if apiVersion == 9 =>
-            // flexible (KIP-482) v9 envelope; the append path (CRC check,
-            // idempotence, txn gating, offset assignment) is IDENTICAL to
-            // v3 — produceAppend is shared
-            val txnId = readCompactString(r) // transactional_id (nullable)
-            r.readShort(); r.readInt()  // acks, timeout_ms
-            val nTopics = readCompactArrayLen(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            writeCompactArrayLen(o, nTopics)
-            (1 to nTopics).foreach { _ =>
-              val name = readCompactString(r)
-              val nParts = readCompactArrayLen(r)
-              writeCompactString(o, name)
-              writeCompactArrayLen(o, nParts)
-              (1 to nParts).foreach { _ =>
-                val p = r.readInt()
-                val rs = readCompactBytes(r)
-                skipTagged(r)
-                val (err, baseOff) = produceAppend(txnId, name, p, rs)
-                o.writeInt(p); o.writeShort(err); o.writeLong(baseOff)
-                o.writeLong(-1L)        // log_append_time: create-time batch
-                o.writeLong(0L)         // log_start_offset
-                writeCompactArrayLen(o, 0) // record_errors
-                writeCompactString(o, null) // error_message
-                writeEmptyTagged(o)
-              }
-              skipTagged(r)
-              writeEmptyTagged(o)
-            }
-            skipTagged(r)
-            if (dropProduceResponses > 0) {
-              dropProduceResponses -= 1
-              throw new EOFException("fake broker: produce response dropped")
-            }
-            o.writeInt(0)               // throttle_time_ms (tails Produce)
-            writeEmptyTagged(o)
-            bo.toByteArray
+            o.int32(0)                  // throttle_time_ms (tails Produce)
+            o.tags()
           case ApiInitProducerId if apiVersion == 0 || apiVersion == 2 =>
-            // v2 = the flexible twin (KIP-482 compact framing), identical
-            // assignment/fencing logic
-            val txnId =
-              if (apiVersion >= 2) readCompactString(r) else readString(r)
-            val timeoutMs = r.readInt() // transaction_timeout_ms
-            if (apiVersion >= 2) skipTagged(r)
+            val txnId = r.string()
+            val timeoutMs = r.int32()   // transaction_timeout_ms
+            r.tags()
             val (pid, epoch) =
               if (txnId == null) (pidCounter.getAndIncrement(), 0: Short)
               else txnProducers.compute(txnId, (_, prev) =>
@@ -653,34 +580,27 @@ final class KafkaLogServer(dir: String, topic: String,
               val it = seqStore.keySet.iterator()
               while (it.hasNext) if (it.next()._1 == pid) it.remove()
             }
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            o.writeShort(0)             // error
-            o.writeLong(pid)
-            o.writeShort(epoch)
-            if (apiVersion >= 2) writeEmptyTagged(o)
-            bo.toByteArray
+            o.int32(0)                  // throttle_time_ms
+            o.int16(0)                  // error
+            o.int64(pid).int16(epoch).tags()
           case ApiAddPartitionsToTxn if apiVersion == 0 || apiVersion == 3 =>
-            val flexTxn = apiVersion >= 3
-            val txnId = if (flexTxn) readCompactString(r) else readString(r)
-            val pid = r.readLong(); val pepoch = r.readShort()
+            val txnId = r.string()
+            val pid = r.int64(); val pepoch = r.int16()
             val reg = Option(txnProducers.get(txnId))
             val fenced = reg.exists(t => t._1 == pid && pepoch < t._2)
             val registered = reg.exists(t => t._1 == pid && t._2 == pepoch)
             if (registered)
               openTxns.computeIfAbsent(pid, _ => new OpenTxn(
                 Option(txnTimeouts.get(pid)).fold(60000)(_.intValue)))
-            val nTopics = if (flexTxn) readCompactArrayLen(r) else r.readInt()
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            if (flexTxn) writeCompactArrayLen(o, nTopics) else o.writeInt(nTopics)
-            (1 to nTopics).foreach { _ =>
-              val name = if (flexTxn) readCompactString(r) else readString(r)
-              val nParts = if (flexTxn) readCompactArrayLen(r) else r.readInt()
-              if (flexTxn) writeCompactString(o, name) else writeString(o, name)
-              if (flexTxn) writeCompactArrayLen(o, nParts) else o.writeInt(nParts)
-              (1 to nParts).foreach { _ =>
-                val p = r.readInt()
+            val topics = r.array {
+              val name = r.string(); val ps = r.array(r.int32()); r.tags()
+              (name, ps)
+            }
+            r.tags()
+            o.int32(0)                  // throttle_time_ms
+            o.array(topics) { case (name, ps) =>
+              o.string(name)
+              o.array(ps) { p =>
                 val err =
                   if (fenced) 90        // PRODUCER_FENCED
                   else if (!registered) 48 // INVALID_TXN_STATE
@@ -691,51 +611,42 @@ final class KafkaLogServer(dir: String, topic: String,
                     txn.synchronized { txn.partitions += p }
                     0
                   }
-                o.writeInt(p); o.writeShort(err)
-                if (flexTxn) writeEmptyTagged(o)
+                o.int32(p).int16(err).tags()
               }
-              if (flexTxn) { skipTagged(r); writeEmptyTagged(o) }
+              o.tags()
             }
-            if (flexTxn) { skipTagged(r); writeEmptyTagged(o) }
-            bo.toByteArray
+            o.tags()
           case ApiAddOffsetsToTxn if apiVersion == 0 || apiVersion == 3 =>
             // registers the consumer group's offsets with the open txn —
             // same fencing/registration rules as AddPartitionsToTxn; the
             // double needs no per-group marker partition (offsets stage
             // inside the OpenTxn), but the txn must exist from here on
-            val flexAo = apiVersion >= 3
-            val txnId = if (flexAo) readCompactString(r) else readString(r)
-            val pid = r.readLong(); val pepoch = r.readShort()
-            if (flexAo) readCompactString(r) else readString(r) // group_id
-            if (flexAo) skipTagged(r)
+            val txnId = r.string()
+            val pid = r.int64(); val pepoch = r.int16()
+            r.string()                  // group_id
+            r.tags()
             val reg = Option(txnProducers.get(txnId))
             val fenced = reg.exists(t => t._1 == pid && pepoch < t._2)
             val registered = reg.exists(t => t._1 == pid && t._2 == pepoch)
             if (registered && !fenced)
               openTxns.computeIfAbsent(pid, _ => new OpenTxn(
                 Option(txnTimeouts.get(pid)).fold(60000)(_.intValue)))
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            o.writeShort(
+            o.int32(0)                  // throttle_time_ms
+            o.int16(
               if (fenced) 90            // PRODUCER_FENCED
               else if (!registered) 48  // INVALID_TXN_STATE
               else 0)
-            if (flexAo) writeEmptyTagged(o)
-            bo.toByteArray
+            o.tags()
           case ApiTxnOffsetCommit if apiVersion == 0 || apiVersion == 3 =>
             // stage consumer offsets INSIDE the transaction: they land in
             // committedStore only when the COMMIT marker does (endOpenTxn)
-            val flexTo = apiVersion >= 3
-            val txnId = if (flexTo) readCompactString(r) else readString(r)
-            val group = if (flexTo) readCompactString(r) else readString(r)
-            val pid = r.readLong(); val pepoch = r.readShort()
+            val txnId = r.string()
+            val group = r.string()
+            val pid = r.int64(); val pepoch = r.int16()
             val (generation, member, instTo) =
-              if (flexTo) {
-                val g = r.readInt()
-                val m = readCompactString(r)
-                val i = readCompactString(r) // group_instance_id (KIP-345)
-                (g, m, i)
-              } else (-1, "", null)
+              if (apiVersion >= 3)      // KIP-447 + group_instance_id
+                (r.int32(), r.string(), r.string())
+              else (-1, "", null)
             val reg = Option(txnProducers.get(txnId))
             val fenced = reg.exists(t => t._1 == pid && pepoch < t._2)
             val registered = reg.exists(t => t._1 == pid && t._2 == pepoch)
@@ -749,88 +660,62 @@ final class KafkaLogServer(dir: String, topic: String,
               if (fenced) 47            // INVALID_PRODUCER_EPOCH
               else if (!registered || txn == null) 48 // INVALID_TXN_STATE
               else groupFence
-            val nTopics = if (flexTo) readCompactArrayLen(r) else r.readInt()
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            if (flexTo) writeCompactArrayLen(o, nTopics) else o.writeInt(nTopics)
-            (1 to nTopics).foreach { _ =>
-              val name = if (flexTo) readCompactString(r) else readString(r)
-              val nParts = if (flexTo) readCompactArrayLen(r) else r.readInt()
-              if (flexTo) writeCompactString(o, name) else writeString(o, name)
-              if (flexTo) writeCompactArrayLen(o, nParts) else o.writeInt(nParts)
-              (1 to nParts).foreach { _ =>
-                val p = r.readInt(); val off = r.readLong()
-                if (flexTo) {
-                  r.readInt()           // committed_leader_epoch (v2+)
-                  readCompactString(r); skipTagged(r)
-                } else readString(r)    // metadata
+            val topics = r.array {
+              val name = r.string()
+              val ps = r.array {
+                val p = r.int32(); val off = r.int64()
+                if (apiVersion >= 2) r.int32() // committed_leader_epoch
+                r.string(); r.tags()    // metadata
+                (p, off)
+              }
+              r.tags()
+              (name, ps)
+            }
+            r.tags()
+            o.int32(0)                  // throttle_time_ms
+            o.array(topics) { case (name, ps) =>
+              o.string(name)
+              o.array(ps) { case (p, off) =>
                 if (code == 0) txn.synchronized {
                   txn.stagedOffsets((group, name, p)) = off
                 }
-                o.writeInt(p); o.writeShort(code)
-                if (flexTo) writeEmptyTagged(o)
+                o.int32(p).int16(code).tags()
               }
-              if (flexTo) { skipTagged(r); writeEmptyTagged(o) }
+              o.tags()
             }
-            if (flexTo) { skipTagged(r); writeEmptyTagged(o) }
-            bo.toByteArray
+            o.tags()
           case ApiEndTxn if apiVersion == 0 || apiVersion == 3 =>
-            val flexTxn = apiVersion >= 3
-            val txnId = if (flexTxn) readCompactString(r) else readString(r)
-            val pid = r.readLong(); val pepoch = r.readShort()
-            val commit = r.readBoolean()
-            if (flexTxn) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
+            val txnId = r.string()
+            val pid = r.int64(); val pepoch = r.int16()
+            val commit = r.bool()
+            r.tags()
+            o.int32(0)                  // throttle_time_ms
             val reg = Option(txnProducers.get(txnId))
             if (reg.exists(t => t._1 == pid && pepoch < t._2))
-              o.writeShort(90)          // PRODUCER_FENCED: zombie EndTxn
+              o.int16(90)               // PRODUCER_FENCED: zombie EndTxn
             else if (openTxns.get(pid) == null ||
                 !reg.exists(t => t._1 == pid && t._2 == pepoch))
-              o.writeShort(48)          // INVALID_TXN_STATE
+              o.int16(48)               // INVALID_TXN_STATE
             else {
               endOpenTxn(pid, commit)
-              o.writeShort(0)
+              o.int16(0)
             }
-            if (flexTxn) writeEmptyTagged(o)
-            bo.toByteArray
+            o.tags()
           case ApiCreateTopics if apiVersion == 0 || apiVersion == 5 =>
-            val flexCt = apiVersion >= 5
-            val nTopics = if (flexCt) readCompactArrayLen(r) else r.readInt()
-            val reqs = (1 to nTopics).map { _ =>
-              if (flexCt) {
-                val name = readCompactString(r)
-                val nParts = r.readInt()
-                val rf = r.readShort()
-                val nAssign = readCompactArrayLen(r)
-                (1 to math.max(nAssign, 0)).foreach { _ =>
-                  r.readInt(); skipCompactIntArray(r); skipTagged(r)
-                }
-                val nConfigs = readCompactArrayLen(r)
-                (1 to math.max(nConfigs, 0)).foreach { _ =>
-                  readCompactString(r); readCompactString(r); skipTagged(r)
-                }
-                skipTagged(r)
-                (name, nParts, rf)
-              } else {
-                val name = readString(r)
-                val nParts = r.readInt()
-                val rf = r.readShort()
-                val nAssign = r.readInt()
-                (1 to nAssign).foreach { _ => r.readInt(); skipIntArray(r) }
-                val nConfigs = r.readInt()
-                (1 to nConfigs).foreach { _ => readString(r); readString(r) }
-                (name, nParts, rf)
-              }
+            val reqs = r.array {
+              val name = r.string()
+              val nParts = r.int32()
+              val rf = r.int16()
+              r.array { r.int32(); r.array(r.int32()); r.tags() } // assignments
+              r.array { r.string(); r.string(); r.tags() } // configs
+              r.tags()
+              (name, nParts, rf)
             }
-            r.readInt()             // timeout_ms (in-process: instantaneous)
-            val validateOnly = if (flexCt) r.readBoolean() else false
-            if (flexCt) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexCt) o.writeInt(0)   // throttle_time_ms
-            if (flexCt) writeCompactArrayLen(o, reqs.size)
-            else o.writeInt(reqs.size)
-            reqs.foreach { case (name, nParts, rf) =>
+            r.int32()             // timeout_ms (in-process: instantaneous)
+            val validateOnly = apiVersion >= 1 && r.bool()
+            r.tags()
+            if (apiVersion >= 2) o.int32(0) // throttle_time_ms
+            o.array(reqs) { case (name, nParts, rf) =>
               val err: Int =
                 if (activeTopic.contains(name)) 36 // TOPIC_ALREADY_EXISTS
                 else if (activeTopic.isDefined) 42 // INVALID_REQUEST: the
@@ -839,34 +724,27 @@ final class KafkaLogServer(dir: String, topic: String,
                 else if (rf != 1 && rf != -1) 38   // INVALID_REPLICATION_FACTOR
                 else if (validateOnly) 0           // checked, not created
                 else { created = Some((name, 0 until nParts)); 0 }
-              if (flexCt) {
-                writeCompactString(o, name); o.writeShort(err)
-                writeCompactString(o, null)      // error_message
-                o.writeInt(if (err == 0) nParts else -1)
-                o.writeShort(if (err == 0) 1 else -1)
-                writeCompactArrayLen(o, 0)       // configs
-                writeEmptyTagged(o)
-              } else { writeString(o, name); o.writeShort(err) }
+              o.string(name).int16(err)
+              if (apiVersion >= 1) o.string(null) // error_message
+              if (apiVersion >= 5) {
+                o.int32(if (err == 0) nParts else -1)
+                o.int16(if (err == 0) 1 else -1)
+                o.arrayLen(0)           // configs
+              }
+              o.tags()
             }
-            if (flexCt) writeEmptyTagged(o)
-            bo.toByteArray
+            o.tags()
           case ApiDeleteTopics if apiVersion == 0 || apiVersion == 5 =>
             // CreateTopics' dual (VERDICT r14 #6): deleting the active
             // topic tombstones it — data (file-backed base AND produced
             // tails) never resurrects on re-create, fetch sessions holding
             // its partition state are dropped, and every subsequent topic
             // request answers UNKNOWN_TOPIC_OR_PARTITION
-            val flexDt = apiVersion >= 4
-            val nNames = if (flexDt) readCompactArrayLen(r) else r.readInt()
-            val names = (1 to nNames).map(_ =>
-              if (flexDt) readCompactString(r) else readString(r))
-            r.readInt()                 // timeout_ms (in-process)
-            if (flexDt) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexDt) o.writeInt(0)   // throttle_time_ms
-            if (flexDt) writeCompactArrayLen(o, names.size)
-            else o.writeInt(names.size)
-            names.foreach { name =>
+            val names = r.array(r.string())
+            r.int32()                   // timeout_ms (in-process)
+            r.tags()
+            if (apiVersion >= 1) o.int32(0) // throttle_time_ms
+            o.array(names) { name =>
               val err: Int =
                 if (activeTopic.contains(name)) {
                   created = None
@@ -884,86 +762,47 @@ final class KafkaLogServer(dir: String, topic: String,
                   logStart.clear()
                   0
                 } else 3                // UNKNOWN_TOPIC_OR_PARTITION
-              if (flexDt) {
-                writeCompactString(o, name); o.writeShort(err)
-                writeCompactString(o, null) // error_message (v5+)
-                writeEmptyTagged(o)
-              } else { writeString(o, name); o.writeShort(err) }
+              o.string(name).int16(err)
+              if (apiVersion >= 5) o.string(null) // error_message
+              o.tags()
             }
-            if (flexDt) writeEmptyTagged(o)
-            bo.toByteArray
+            o.tags()
           case ApiDescribeGroups if apiVersion == 0 || apiVersion == 5 =>
-            val flexDg = apiVersion >= 5
-            val nGroups = if (flexDg) readCompactArrayLen(r) else r.readInt()
-            val gids = (1 to nGroups).map(_ =>
-              if (flexDg) readCompactString(r) else readString(r))
-            if (flexDg) { r.readBoolean(); skipTagged(r) } // include_authz
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexDg) o.writeInt(0)   // throttle_time_ms (v1+)
-            if (flexDg) writeCompactArrayLen(o, gids.size)
-            else o.writeInt(gids.size)
-            gids.foreach { gid =>
+            val gids = r.array(r.string())
+            if (apiVersion >= 3) r.bool() // include_authorized_operations
+            r.tags()
+            if (apiVersion >= 1) o.int32(0) // throttle_time_ms
+            o.array(gids) { gid =>
               val (state, ptype, pname, members) = groupCoordinator.describe(gid)
-              o.writeShort(0)           // error_code (unknown group = Dead)
-              if (flexDg) {
-                writeCompactString(o, gid)
-                writeCompactString(o, state)
-                writeCompactString(o, ptype)
-                writeCompactString(o, pname)
-                writeCompactArrayLen(o, members.size)
-                members.foreach { case (mid, md, assign) =>
-                  writeCompactString(o, mid)
-                  writeCompactString(o, null) // group_instance_id (v4+)
-                  writeCompactString(o, mid)  // client_id: the double's
-                  writeCompactString(o, "/127.0.0.1") // stand-ins
-                  writeCompactBytes(o, md)
-                  writeCompactBytes(o, assign)
-                  writeEmptyTagged(o)
-                }
-                o.writeInt(Int.MinValue) // authorized_operations: omitted
-                writeEmptyTagged(o)
-              } else {
-                writeString(o, gid); writeString(o, state)
-                writeString(o, ptype); writeString(o, pname)
-                o.writeInt(members.size)
-                members.foreach { case (mid, md, assign) =>
-                  writeString(o, mid)
-                  writeString(o, mid)          // client_id
-                  writeString(o, "/127.0.0.1") // client_host
-                  o.writeInt(md.length); o.write(md)
-                  o.writeInt(assign.length); o.write(assign)
-                }
+              o.int16(0)                // error_code (unknown group = Dead)
+              o.string(gid).string(state).string(ptype).string(pname)
+              o.array(members) { case (mid, md, assign) =>
+                o.string(mid)
+                if (apiVersion >= 4) o.string(null) // group_instance_id
+                o.string(mid)           // client_id: the double's
+                o.string("/127.0.0.1")  // stand-ins
+                o.bytes(md).bytes(assign).tags()
               }
+              if (apiVersion >= 3) o.int32(Int.MinValue) // authorized_operations: omitted
+              o.tags()
             }
-            if (flexDg) writeEmptyTagged(o)
-            bo.toByteArray
+            o.tags()
           case ApiListGroups if apiVersion == 0 || apiVersion == 4 =>
-            val flexLg = apiVersion >= 3
             val statesFilter: Set[String] =
-              if (apiVersion >= 4) {
-                val n = readCompactArrayLen(r)
-                val st = (1 to n).map(_ => readCompactString(r)).toSet
-                skipTagged(r)
-                st
-              } else Set.empty
+              if (apiVersion >= 4) r.array(r.string()).toSet else Set.empty
+            r.tags()
             val all = groupCoordinator.list()
             val shown =
               if (statesFilter.isEmpty) all
               else all.filter(g => statesFilter.contains(g._3))
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexLg) o.writeInt(0)   // throttle_time_ms (v1+)
-            o.writeShort(0)             // error_code
-            if (flexLg) writeCompactArrayLen(o, shown.size)
-            else o.writeInt(shown.size)
-            shown.foreach { case (gid, ptype, state) =>
-              if (flexLg) {
-                writeCompactString(o, gid); writeCompactString(o, ptype)
-                if (apiVersion >= 4) writeCompactString(o, state)
-                writeEmptyTagged(o)
-              } else { writeString(o, gid); writeString(o, ptype) }
+            if (apiVersion >= 1) o.int32(0) // throttle_time_ms
+            o.int16(0)                  // error_code
+            o.array(shown) { case (gid, ptype, state) =>
+              o.string(gid).string(ptype)
+              if (apiVersion >= 4) o.string(state)
+              o.tags()
             }
-            if (flexLg) writeEmptyTagged(o)
-            bo.toByteArray
+            o.tags()
           case ApiDeleteRecords if apiVersion >= 0 && apiVersion <= 2 =>
             // api 21: advance the log-start offset ("low watermark") —
             // log truncation. Post-conditions a real broker guarantees and
@@ -972,28 +811,21 @@ final class KafkaLogServer(dir: String, topic: String,
             // offset -1 truncates to the high watermark; an offset past
             // the HW is OFFSET_OUT_OF_RANGE; truncation is monotonic (a
             // lower request never moves the watermark back).
-            val flexDr = apiVersion >= 2
-            val nT = if (flexDr) readCompactArrayLen(r) else r.readInt()
-            val req = (1 to nT).map { _ =>
-              val name = if (flexDr) readCompactString(r) else readString(r)
-              val nP = if (flexDr) readCompactArrayLen(r) else r.readInt()
-              val ps = (1 to nP).map { _ =>
-                val p = r.readInt(); val off = r.readLong()
-                if (flexDr) skipTagged(r)
+            val req = r.array {
+              val name = r.string()
+              val ps = r.array {
+                val p = r.int32(); val off = r.int64(); r.tags()
                 (p, off)
               }
-              if (flexDr) skipTagged(r)
+              r.tags()
               (name, ps)
             }
-            r.readInt()                 // timeout_ms (in-process)
-            if (flexDr) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            if (flexDr) writeCompactArrayLen(o, req.size) else o.writeInt(req.size)
-            req.foreach { case (name, ps) =>
-              if (flexDr) writeCompactString(o, name) else writeString(o, name)
-              if (flexDr) writeCompactArrayLen(o, ps.size) else o.writeInt(ps.size)
-              ps.foreach { case (p, off) =>
+            r.int32()                   // timeout_ms (in-process)
+            r.tags()
+            o.int32(0)                  // throttle_time_ms
+            o.array(req) { case (name, ps) =>
+              o.string(name)
+              o.array(ps) { case (p, off) =>
                 val (low, err): (Long, Int) =
                   if (!activeTopic.contains(name) || !partitionIds.contains(p))
                     (-1L, 3)            // UNKNOWN_TOPIC_OR_PARTITION
@@ -1007,13 +839,11 @@ final class KafkaLogServer(dir: String, topic: String,
                       (nl, 0)
                     }
                   }
-                o.writeInt(p); o.writeLong(low); o.writeShort(err)
-                if (flexDr) writeEmptyTagged(o)
+                o.int32(p).int64(low).int16(err).tags()
               }
-              if (flexDr) writeEmptyTagged(o)
+              o.tags()
             }
-            if (flexDr) writeEmptyTagged(o)
-            bo.toByteArray
+            o.tags()
           case ApiDeleteGroups if apiVersion >= 0 && apiVersion <= 2 =>
             // api 42: remove consumer groups wholesale — OffsetDelete's
             // group-level sibling. A group with LIVE members answers
@@ -1021,15 +851,10 @@ final class KafkaLogServer(dir: String, topic: String,
             // the coordinator never saw (no state, no committed offsets)
             // answers GROUP_ID_NOT_FOUND (69). Deletion drops BOTH the
             // membership state and every committed offset of the group.
-            val flexDg = apiVersion >= 2
-            val nG = if (flexDg) readCompactArrayLen(r) else r.readInt()
-            val gids = (1 to nG).map(_ =>
-              if (flexDg) readCompactString(r) else readString(r))
-            if (flexDg) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            if (flexDg) writeCompactArrayLen(o, gids.size) else o.writeInt(gids.size)
-            gids.foreach { gid =>
+            val gids = r.array(r.string())
+            r.tags()
+            o.int32(0)                  // throttle_time_ms
+            o.array(gids) { gid =>
               import scala.jdk.CollectionConverters._
               val hasOffsets = committedStore.asScala.keys.exists(_._1 == gid)
               val err: Int = groupCoordinator.delete(gid) match {
@@ -1040,13 +865,9 @@ final class KafkaLogServer(dir: String, topic: String,
                 case c => c
               }
               if (err == 0) committedStore.keySet.removeIf(_._1 == gid)
-              if (flexDg) {
-                writeCompactString(o, gid); o.writeShort(err)
-                writeEmptyTagged(o)
-              } else { writeString(o, gid); o.writeShort(err) }
+              o.string(gid).int16(err).tags()
             }
-            if (flexDg) writeEmptyTagged(o)
-            bo.toByteArray
+            o.tags()
           case ApiDescribeConfigs if apiVersion >= 1 && apiVersion <= 4 =>
             // api 32: the AdminClient's config read — the effective value
             // of every (or each requested) topic config, with its source
@@ -1055,93 +876,73 @@ final class KafkaLogServer(dir: String, topic: String,
             // resource types answer INVALID_REQUEST (42) per-resource,
             // unknown topics UNKNOWN_TOPIC_OR_PARTITION (3) — named
             // errors, never a dropped connection.
-            val flexDc = apiVersion >= 4
-            val nRes = if (flexDc) readCompactArrayLen(r) else r.readInt()
-            val resources = (1 to nRes).map { _ =>
-              val rtype = r.readByte()
-              val rname = if (flexDc) readCompactString(r) else readString(r)
-              val nKeys = if (flexDc) readCompactArrayLen(r) else r.readInt()
+            val resources = r.array {
+              val rtype = r.int8()
+              val rname = r.string()
+              val nKeys = r.arrayLen()
               val keys: Seq[String] =
-                if (nKeys < 0) null
-                else (1 to nKeys).map(_ =>
-                  if (flexDc) readCompactString(r) else readString(r))
-              if (flexDc) skipTagged(r)
+                if (nKeys < 0) null else (1 to nKeys).map(_ => r.string())
+              r.tags()
               (rtype, rname, keys)
             }
-            r.readBoolean()             // include_synonyms (v1+)
-            if (apiVersion >= 3) r.readBoolean() // include_documentation
-            if (flexDc) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            if (flexDc) writeCompactArrayLen(o, resources.size)
-            else o.writeInt(resources.size)
-            def wStr(s: String): Unit =
-              if (flexDc) writeCompactString(o, s)
-              else if (s == null) o.writeShort(-1) // nullable string
-              else writeString(o, s)
-            resources.foreach { case (rtype, rname, keys) =>
+            r.bool()                    // include_synonyms (v1+)
+            if (apiVersion >= 3) r.bool() // include_documentation
+            r.tags()
+            o.int32(0)                  // throttle_time_ms
+            o.array(resources) { case (rtype, rname, keys) =>
               val err: Int =
                 if (rtype != 2) 42      // INVALID_REQUEST: only TOPIC here
                 else if (!activeTopic.contains(rname)) 3
                 else 0
-              o.writeShort(err)
-              wStr(if (err == 0) null else s"resource error $err")
-              o.writeByte(rtype); wStr(rname)
+              o.int16(err)
+              o.string(if (err == 0) null else s"resource error $err")
+              o.int8(rtype).string(rname)
               val listed: Seq[String] =
                 if (err != 0) Nil
                 else if (keys == null || keys.isEmpty)
                   KafkaLogServer.TopicConfigDefaults.keys.toSeq.sorted
                 else keys
-              if (flexDc) writeCompactArrayLen(o, listed.size)
-              else o.writeInt(listed.size)
-              listed.foreach { key =>
+              o.array(listed) { key =>
                 val dyn = Option(topicConfigs.get((rname, key)))
                 val dflt = KafkaLogServer.TopicConfigDefaults.get(key)
-                wStr(key)
-                wStr(dyn.orElse(dflt.map(_._1)).orNull) // value (null = unknown key)
-                o.writeBoolean(false)   // read_only
-                o.writeByte(if (dyn.isDefined) 1 else 5) // config_source
-                o.writeBoolean(false)   // is_sensitive
-                if (flexDc) writeCompactArrayLen(o, 0) else o.writeInt(0) // synonyms
+                o.string(key)
+                o.string(dyn.orElse(dflt.map(_._1)).orNull) // value (null = unknown key)
+                o.bool(false)           // read_only
+                o.int8(if (dyn.isDefined) 1 else 5) // config_source
+                o.bool(false)           // is_sensitive
+                o.arrayLen(0)           // synonyms
                 if (apiVersion >= 3) {
-                  o.writeByte(dflt.map(_._2.toInt).getOrElse(0)) // config_type
-                  wStr(null)            // documentation
+                  o.int8(dflt.map(_._2.toInt).getOrElse(0)) // config_type
+                  o.string(null)        // documentation
                 }
-                if (flexDc) writeEmptyTagged(o)
+                o.tags()
               }
-              if (flexDc) writeEmptyTagged(o)
+              o.tags()
             }
-            if (flexDc) writeEmptyTagged(o)
-            bo.toByteArray
+            o.tags()
           case ApiIncrementalAlterConfigs if apiVersion == 0 || apiVersion == 1 =>
             // api 44: the AdminClient's config write — SET/DELETE/APPEND/
             // SUBTRACT ops per config, validate_only dry runs, per-resource
             // named errors (INVALID_CONFIG 40 for unknown keys, bad values,
             // or list-ops on non-list configs). Applied overrides are
             // OBSERVABLE: the produce path enforces max.message.bytes.
-            val flexIa = apiVersion >= 1
-            val nRes = if (flexIa) readCompactArrayLen(r) else r.readInt()
-            val resources = (1 to nRes).map { _ =>
-              val rtype = r.readByte()
-              val rname = if (flexIa) readCompactString(r) else readString(r)
-              val nCfg = if (flexIa) readCompactArrayLen(r) else r.readInt()
-              val cfgs = (1 to nCfg).map { _ =>
-                val key = if (flexIa) readCompactString(r) else readString(r)
-                val op = r.readByte()
-                val value = if (flexIa) readCompactString(r) else readString(r)
-                if (flexIa) skipTagged(r)
+            val resources = r.array {
+              val rtype = r.int8()
+              val rname = r.string()
+              val cfgs = r.array {
+                val key = r.string()
+                val op = r.int8()
+                val value = r.string()
+                r.tags()
                 (key, op, value)
               }
-              if (flexIa) skipTagged(r)
+              r.tags()
               (rtype, rname, cfgs)
             }
-            val validateOnly = r.readBoolean()
-            if (flexIa) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            if (flexIa) writeCompactArrayLen(o, resources.size)
-            else o.writeInt(resources.size)
-            resources.foreach { case (rtype, rname, cfgs) =>
+            val validateOnly = r.bool()
+            r.tags()
+            o.int32(0)                  // throttle_time_ms
+            o.array(resources) { case (rtype, rname, cfgs) =>
               def badValue(key: String, v: String): Boolean =
                 KafkaLogServer.TopicConfigDefaults.get(key).exists {
                   case (_, 3, _) => // INT
@@ -1185,17 +986,11 @@ final class KafkaLogServer(dir: String, topic: String,
                     items.filterNot(_ == v).mkString(","))
                 case _ =>
               }
-              o.writeShort(err)
-              val msg = if (err == 0) null else s"config error $err"
-              if (flexIa) writeCompactString(o, msg)
-              else if (msg == null) o.writeShort(-1) // nullable string
-              else writeString(o, msg)
-              o.writeByte(rtype)
-              if (flexIa) writeCompactString(o, rname) else writeString(o, rname)
-              if (flexIa) writeEmptyTagged(o)
+              o.int16(err)
+              o.string(if (err == 0) null else s"config error $err")
+              o.int8(rtype).string(rname).tags()
             }
-            if (flexIa) writeEmptyTagged(o)
-            bo.toByteArray
+            o.tags()
           case ApiOffsetDelete if apiVersion == 0 =>
             // KIP-496: administrative offset reset. Unknown group answers
             // GROUP_ID_NOT_FOUND (69) at the group level; a group whose
@@ -1203,153 +998,111 @@ final class KafkaLogServer(dir: String, topic: String,
             // GROUP_SUBSCRIBED_TO_TOPIC (86) — an active subscription's
             // offsets are never yanked; otherwise the committed offsets
             // are dropped (idempotent: deleting an absent offset is 0).
-            val group = readString(r)
-            val nT = r.readInt()
-            val req = (1 to nT).flatMap { _ =>
-              val name = readString(r)
-              val nP = r.readInt()
-              (1 to nP).map(_ => (name, r.readInt()))
-            }
+            val group = r.string()
+            val req = r.array {
+              val name = r.string()
+              r.array((name, r.int32()))
+            }.flatten
             val (gState, _, _, members) = groupCoordinator.describe(group)
             val groupKnown = gState != "Dead" || {
               import scala.jdk.CollectionConverters._
               committedStore.asScala.keys.exists(_._1 == group)
             }
             val live = members.nonEmpty
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (!groupKnown) {
-              o.writeShort(69)          // GROUP_ID_NOT_FOUND
-              o.writeInt(0)             // throttle_time_ms
-              o.writeInt(0)             // no topics
-            } else {
-              o.writeShort(0)
-              o.writeInt(0)             // throttle_time_ms
-              val byTopic = req.groupBy(_._1)
-              o.writeInt(byTopic.size)
-              byTopic.toSeq.sortBy(_._1).foreach { case (name, ps) =>
-                writeString(o, name)
-                o.writeInt(ps.size)
-                ps.foreach { case (_, p) =>
-                  val err: Int =
-                    if (live) 86        // GROUP_SUBSCRIBED_TO_TOPIC
-                    else { committedStore.remove((group, name, p)); 0 }
-                  o.writeInt(p); o.writeShort(err)
-                }
+            o.int16(if (groupKnown) 0 else 69) // 69: GROUP_ID_NOT_FOUND
+            o.int32(0)                  // throttle_time_ms
+            val byTopic =
+              if (groupKnown) req.groupBy(_._1).toSeq.sortBy(_._1) else Nil
+            o.array(byTopic) { case (name, ps) =>
+              o.string(name)
+              o.array(ps) { case (_, p) =>
+                val err: Int =
+                  if (live) 86          // GROUP_SUBSCRIBED_TO_TOPIC
+                  else { committedStore.remove((group, name, p)); 0 }
+                o.int32(p).int16(err)
               }
             }
-            bo.toByteArray
-          case ApiMetadata if apiVersion == 0 => metadata(r)
-          case ApiMetadata if apiVersion == 9 => metadataV9(r)
-          case ApiListOffsets if apiVersion == 1 || apiVersion == 2 =>
-            listOffsets(r, apiVersion)
-          case ApiListOffsets if apiVersion == 6 => listOffsetsV6(r)
-          case ApiFetch if apiVersion == 4 => fetch(r)
-          case ApiFetch if apiVersion == 12 => fetchV12(r)
+          case ApiMetadata if apiVersion == 0 || apiVersion == 9 => metadata(r, o)
+          case ApiListOffsets if apiVersion == 1 || apiVersion == 2 ||
+              apiVersion == 6 => listOffsets(r, o)
+          case ApiFetch if apiVersion == 4 || apiVersion == 12 => fetch(r, o)
           case ApiFindCoordinator if apiVersion == 0 || apiVersion == 3 =>
-            val flexFc = apiVersion >= 3
-            if (flexFc) { readCompactString(r); r.readByte(); skipTagged(r) }
-            else readString(r)          // group id: single node = coordinator
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexFc) {
-              o.writeInt(0)             // throttle_time_ms
-              o.writeShort(0)           // error
-              writeCompactString(o, null) // error_message
-              o.writeInt(0)             // node id
-              writeCompactString(o, "127.0.0.1"); o.writeInt(boundPort)
-              writeEmptyTagged(o)
-            } else {
-              o.writeShort(0); o.writeInt(0)
-              writeString(o, "127.0.0.1"); o.writeInt(boundPort)
-            }
-            bo.toByteArray
+            r.string()                  // key: single node = coordinator
+            if (apiVersion >= 1) r.int8() // key_type
+            r.tags()
+            if (apiVersion >= 1) o.int32(0) // throttle_time_ms
+            o.int16(0)                  // error
+            if (apiVersion >= 1) o.string(null) // error_message
+            o.int32(0)                  // node id
+            o.string("127.0.0.1").int32(boundPort).tags()
           case ApiJoinGroup if apiVersion == 0 || apiVersion == 6 =>
-            groupCoordinator.joinGroup(r, apiVersion)
+            groupCoordinator.joinGroup(r, o)
           case ApiSyncGroup if apiVersion == 0 || apiVersion == 4 =>
-            groupCoordinator.syncGroup(r, apiVersion)
+            groupCoordinator.syncGroup(r, o)
           case ApiHeartbeat if apiVersion == 0 || apiVersion == 4 =>
-            groupCoordinator.heartbeat(r, apiVersion)
+            groupCoordinator.heartbeat(r, o)
           case ApiLeaveGroup if apiVersion == 0 || apiVersion == 4 =>
-            groupCoordinator.leaveGroup(r, apiVersion)
+            groupCoordinator.leaveGroup(r, o)
           case ApiOffsetCommit if apiVersion == 2 || apiVersion == 8 =>
-            val flexOc = apiVersion >= 8
-            val group = if (flexOc) readCompactString(r) else readString(r)
-            val generation = r.readInt()
-            val member = if (flexOc) readCompactString(r) else readString(r)
+            val group = r.string()
+            val generation = r.int32()
+            val member = r.string()
             val instOc =
-              if (flexOc) readCompactString(r) // group_instance_id (KIP-345)
-              else { r.readLong(); null }      // retention (removed in v5+)
+              if (apiVersion >= 7) r.string() else null // group_instance_id
+            if (apiVersion >= 2 && apiVersion <= 4) r.int64() // retention_time_ms
             // generation fencing: a member commit must carry the LIVE
             // generation; -1/"" is the simple consumer and always passes.
             // KIP-345: a replaced static incarnation is fenced (82) by its
             // instance id so it can never clobber its successor's offsets.
             val fence =
               groupCoordinator.validateCommit(group, generation, member, instOc)
-            val nTopics = if (flexOc) readCompactArrayLen(r) else r.readInt()
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexOc) o.writeInt(0)   // throttle_time_ms
-            if (flexOc) writeCompactArrayLen(o, nTopics) else o.writeInt(nTopics)
-            (1 to nTopics).foreach { _ =>
-              val name = if (flexOc) readCompactString(r) else readString(r)
-              val nParts = if (flexOc) readCompactArrayLen(r) else r.readInt()
-              if (flexOc) writeCompactString(o, name) else writeString(o, name)
-              if (flexOc) writeCompactArrayLen(o, nParts) else o.writeInt(nParts)
-              (1 to nParts).foreach { _ =>
-                val p = r.readInt(); val off = r.readLong()
-                if (flexOc) {
-                  r.readInt()           // committed_leader_epoch
-                  readCompactString(r); skipTagged(r)
-                } else readString(r)    // metadata
-                if (fence == 0) committedStore.put((group, name, p), off)
-                o.writeInt(p); o.writeShort(fence)
-                if (flexOc) writeEmptyTagged(o)
+            val topics = r.array {
+              val name = r.string()
+              val ps = r.array {
+                val p = r.int32(); val off = r.int64()
+                if (apiVersion >= 6) r.int32() // committed_leader_epoch
+                r.string(); r.tags()    // metadata
+                (p, off)
               }
-              if (flexOc) { skipTagged(r); writeEmptyTagged(o) }
+              r.tags()
+              (name, ps)
             }
-            if (flexOc) { skipTagged(r); writeEmptyTagged(o) }
-            bo.toByteArray
+            r.tags()
+            if (apiVersion >= 3) o.int32(0) // throttle_time_ms
+            o.array(topics) { case (name, ps) =>
+              o.string(name)
+              o.array(ps) { case (p, off) =>
+                if (fence == 0) committedStore.put((group, name, p), off)
+                o.int32(p).int16(fence).tags()
+              }
+              o.tags()
+            }
+            o.tags()
           case ApiOffsetFetch if apiVersion == 1 || apiVersion == 6 =>
-            val flexOf = apiVersion >= 6
-            val group = if (flexOf) readCompactString(r) else readString(r)
-            val nTopics = if (flexOf) readCompactArrayLen(r) else r.readInt()
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexOf) o.writeInt(0)   // throttle_time_ms
-            if (flexOf) writeCompactArrayLen(o, math.max(nTopics, 0))
-            else o.writeInt(nTopics)
-            (1 to math.max(nTopics, 0)).foreach { _ =>
-              val name = if (flexOf) readCompactString(r) else readString(r)
-              val nParts = if (flexOf) readCompactArrayLen(r) else r.readInt()
-              if (flexOf) writeCompactString(o, name) else writeString(o, name)
-              if (flexOf) writeCompactArrayLen(o, nParts) else o.writeInt(nParts)
-              (1 to nParts).foreach { _ =>
-                val p = r.readInt()
+            val group = r.string()
+            val topics = r.array {
+              val name = r.string(); val ps = r.array(r.int32()); r.tags()
+              (name, ps)
+            }
+            r.tags()
+            if (apiVersion >= 3) o.int32(0) // throttle_time_ms
+            o.array(topics) { case (name, ps) =>
+              o.string(name)
+              o.array(ps) { p =>
                 val off = Option(committedStore.get((group, name, p)))
                   .map(Long.unbox).getOrElse(-1L)
-                o.writeInt(p); o.writeLong(off)
-                if (flexOf) {
-                  o.writeInt(-1)        // committed_leader_epoch
-                  writeCompactString(o, ""); o.writeShort(0)
-                  writeEmptyTagged(o)
-                } else { writeString(o, ""); o.writeShort(0) }
+                o.int32(p).int64(off)
+                if (apiVersion >= 5) o.int32(-1) // committed_leader_epoch
+                o.string("").int16(0).tags() // metadata, error_code
               }
-              if (flexOf) { skipTagged(r); writeEmptyTagged(o) }
+              o.tags()
             }
-            if (flexOf) {
-              skipTagged(r)
-              o.writeShort(0)           // top-level error_code
-              writeEmptyTagged(o)
-            }
-            bo.toByteArray
+            if (apiVersion >= 2) o.int16(0) // top-level error_code
+            o.tags()
           case other =>
             throw new IOException(s"fake broker: unsupported api $other v$apiVersion")
         }
-        // flexible responses carry header v1 (correlation id + tagged
-        // buffer) — EXCEPT ApiVersions, pinned at header v0 per KIP-511
-        val flexHeader = flex && apiKey != ApiApiVersions
-        out.writeInt(4 + (if (flexHeader) 1 else 0) + body.length)
-        out.writeInt(correlationId)
-        if (flexHeader) out.writeByte(0)   // empty tagged-field buffer
-        out.write(body)
-        out.flush()
+        writeResponse(out, apiKey, apiVersion, correlationId, o.toByteArray)
       }
     } catch {
       // a clean client disconnect is not a handler failure — even in debug
@@ -1365,90 +1118,48 @@ final class KafkaLogServer(dir: String, topic: String,
     } finally sock.close()
   }
 
-  private def metadata(r: DataInputStream): Array[Byte] = {
-    // honor the request's topic list: a topic this broker does not serve
-    // (not yet created under requireCreate, or simply foreign) answers
-    // UNKNOWN_TOPIC_OR_PARTITION per topic, like a real broker with
-    // auto-creation off; an empty request (= all topics) lists the active
-    // topic if there is one
+  /** Metadata (v0 or the flexible v9, which adds leader_epoch,
+    * offline_replicas, rack, cluster_id and the authorized-operations
+    * fields). Honors the request's topic list: a topic this broker does
+    * not serve (not yet created under requireCreate, or simply foreign)
+    * answers UNKNOWN_TOPIC_OR_PARTITION per topic, like a real broker with
+    * auto-creation off; an empty request (= all topics) lists the active
+    * topic if there is one. */
+  private def metadata(r: WireReader, o: WireWriter): Unit = {
+    val v = r.version
     val requested = {
-      val n = r.readInt()
-      if (n <= 0) activeTopic.toSeq else (1 to n).map(_ => readString(r))
-    }
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    o.writeInt(1)                       // brokers
-    o.writeInt(0); writeString(o, "127.0.0.1"); o.writeInt(boundPort)
-    o.writeInt(requested.size)          // topics
-    requested.foreach { name =>
-      if (activeTopic.contains(name)) {
-        o.writeShort(0); writeString(o, name)
-        val parts = partitionIds
-        o.writeInt(parts.size)
-        parts.foreach { p =>
-          o.writeShort(0); o.writeInt(p); o.writeInt(0) // error, id, leader
-          o.writeInt(1); o.writeInt(0) // replicas [0]
-          o.writeInt(1); o.writeInt(0) // isr [0]
-        }
-      } else {
-        o.writeShort(3)                 // UNKNOWN_TOPIC_OR_PARTITION
-        writeString(o, name)
-        o.writeInt(0)                   // no partitions
-      }
-    }
-    bo.toByteArray
-  }
-
-  /** Metadata over the flexible v9 frame — same topic/partition answers as
-    * [[metadata]], re-framed per KIP-482 (compact strings/arrays, tagged
-    * buffers, leader_epoch/offline_replicas/rack/cluster_id and the v8-v10
-    * authorized-operations fields). */
-  private def metadataV9(r: DataInputStream): Array[Byte] = {
-    val requested = {
-      val n = readCompactArrayLen(r)
+      val n = r.arrayLen()
       if (n <= 0) activeTopic.toSeq
-      else (1 to n).map { _ =>
-        val name = readCompactString(r); skipTagged(r); name
-      }
+      else (1 to n).map { _ => val name = r.string(); r.tags(); name }
     }
-    r.readBoolean()                     // allow_auto_topic_creation
-    r.readBoolean()                     // include_cluster_authorized_operations
-    r.readBoolean()                     // include_topic_authorized_operations
-    skipTagged(r)
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    o.writeInt(0)                       // throttle_time_ms
-    writeCompactArrayLen(o, 1)          // brokers
-    o.writeInt(0); writeCompactString(o, "127.0.0.1"); o.writeInt(boundPort)
-    writeCompactString(o, null)         // rack
-    writeEmptyTagged(o)
-    writeCompactString(o, "graft-double") // cluster_id
-    o.writeInt(0)                       // controller_id
-    writeCompactArrayLen(o, requested.size)
-    requested.foreach { name =>
-      if (activeTopic.contains(name)) {
-        o.writeShort(0); writeCompactString(o, name)
-        o.writeBoolean(false)           // is_internal
-        val parts = partitionIds
-        writeCompactArrayLen(o, parts.size)
-        parts.foreach { p =>
-          o.writeShort(0); o.writeInt(p); o.writeInt(0) // error, id, leader
-          o.writeInt(0)                 // leader_epoch
-          writeCompactArrayLen(o, 1); o.writeInt(0)     // replicas [0]
-          writeCompactArrayLen(o, 1); o.writeInt(0)     // isr [0]
-          writeCompactArrayLen(o, 0)                    // offline_replicas
-          writeEmptyTagged(o)
-        }
-      } else {
-        o.writeShort(3)                 // UNKNOWN_TOPIC_OR_PARTITION
-        writeCompactString(o, name)
-        o.writeBoolean(false)
-        writeCompactArrayLen(o, 0)
+    if (v >= 4) r.bool()                // allow_auto_topic_creation
+    if (v >= 8) { r.bool(); r.bool() }  // include_{cluster,topic}_authorized_operations
+    r.tags()
+    if (v >= 3) o.int32(0)              // throttle_time_ms
+    o.arrayLen(1)                       // brokers
+    o.int32(0).string("127.0.0.1").int32(boundPort)
+    if (v >= 1) o.string(null)          // rack
+    o.tags()
+    if (v >= 2) o.string("graft-double") // cluster_id
+    if (v >= 1) o.int32(0)              // controller_id
+    o.array(requested) { name =>
+      val known = activeTopic.contains(name)
+      o.int16(if (known) 0 else 3)      // 3: UNKNOWN_TOPIC_OR_PARTITION
+      o.string(name)
+      if (v >= 1) o.bool(false)         // is_internal
+      o.array(if (known) partitionIds else Nil) { p =>
+        o.int16(0).int32(p).int32(0)    // error, id, leader
+        if (v >= 7) o.int32(0)          // leader_epoch
+        o.arrayLen(1).int32(0)          // replicas [0]
+        o.arrayLen(1).int32(0)          // isr [0]
+        if (v >= 5) o.arrayLen(0)       // offline_replicas
+        o.tags()
       }
-      o.writeInt(Int.MinValue)          // topic_authorized_operations: none
-      writeEmptyTagged(o)
+      if (v >= 8) o.int32(Int.MinValue) // topic_authorized_operations: none
+      o.tags()
     }
-    o.writeInt(Int.MinValue)            // cluster_authorized_operations
-    writeEmptyTagged(o)
-    bo.toByteArray
+    if (v >= 8 && v <= 10) o.int32(Int.MinValue) // cluster_authorized_operations
+    o.tags()
   }
 
   /** ListOffsets by REAL timestamp (KIP-79): the earliest VISIBLE offset
@@ -1486,31 +1197,44 @@ final class KafkaLogServer(dir: String, topic: String,
     -1L
   }
 
-  private def listOffsets(r: DataInputStream, version: Short): Array[Byte] = {
-    r.readInt()                         // replica id
-    // v2 added the isolation level: read_committed's "latest" is the LSO
-    val isolation = if (version >= 2) r.readByte() else 0
-    val nTopics = r.readInt()
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    if (version >= 2) o.writeInt(0)     // throttle_time_ms
-    o.writeInt(nTopics)
-    (1 to nTopics).foreach { _ =>
-      val name = readString(r)
-      val nParts = r.readInt()
-      writeString(o, name)
-      o.writeInt(nParts)
-      (1 to nParts).foreach { _ =>
-        val p = r.readInt(); val ts = r.readLong()
+  /** ListOffsets (v1, v2 or the flexible v6). v2 added the isolation
+    * level: read_committed's "latest" is the LSO. v6's request adds
+    * current_leader_epoch (ignored: single broker, one epoch) and its
+    * response a leader_epoch (−1, like a broker that does not track it). */
+  private def listOffsets(r: WireReader, o: WireWriter): Unit = {
+    val v = r.version
+    r.int32()                           // replica id
+    val isolation = if (v >= 2) r.int8() else 0
+    val topics = r.array {
+      val name = r.string()
+      val ps = r.array {
+        val p = r.int32()
+        if (v >= 4) r.int32()           // current_leader_epoch
+        val ts = r.int64()
+        r.tags()
+        (p, ts)
+      }
+      r.tags()
+      (name, ps)
+    }
+    r.tags()
+    if (v >= 2) o.int32(0)              // throttle_time_ms
+    o.array(topics) { case (name, ps) =>
+      o.string(name)
+      o.array(ps) { case (p, ts) =>
         val off =
           if (ts == -2L) logStartOffset(p) // earliest = the low watermark
           else if (ts >= 0L) offsetForTimestamp(p, ts,
             if (isolation == 1) lastStable(p) else endOffset(p))
           else if (isolation == 1) lastStable(p)
           else endOffset(p)
-        o.writeInt(p); o.writeShort(0); o.writeLong(ts); o.writeLong(off)
+        o.int32(p).int16(0).int64(ts).int64(off)
+        if (v >= 4) o.int32(-1)         // leader_epoch: not tracked
+        o.tags()
       }
+      o.tags()
     }
-    bo.toByteArray
+    o.tags()
   }
 
   /** One partition's produce-append decision — a real broker's produce
@@ -1583,98 +1307,6 @@ final class KafkaLogServer(dir: String, topic: String,
       }
     }
 
-  /** ListOffsets over the flexible v6 frame (KIP-482) — same
-    * isolation-aware answers as v2 (read_committed "latest" = the LSO);
-    * the request adds current_leader_epoch (ignored: single-broker, one
-    * epoch) and the response a leader_epoch (−1, like a broker that does
-    * not track it). */
-  private def listOffsetsV6(r: DataInputStream): Array[Byte] = {
-    r.readInt()                         // replica id
-    val isolation = r.readByte()
-    val nTopics = readCompactArrayLen(r)
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    o.writeInt(0)                       // throttle_time_ms
-    writeCompactArrayLen(o, nTopics)
-    (1 to nTopics).foreach { _ =>
-      val name = readCompactString(r)
-      val nParts = readCompactArrayLen(r)
-      writeCompactString(o, name)
-      writeCompactArrayLen(o, nParts)
-      (1 to nParts).foreach { _ =>
-        val p = r.readInt()
-        r.readInt()                     // current_leader_epoch
-        val ts = r.readLong()
-        skipTagged(r)
-        val off =
-          if (ts == -2L) logStartOffset(p) // earliest = the low watermark
-          else if (ts >= 0L) offsetForTimestamp(p, ts,
-            if (isolation == 1) lastStable(p) else endOffset(p))
-          else if (isolation == 1) lastStable(p)
-          else endOffset(p)
-        o.writeInt(p); o.writeShort(0); o.writeLong(ts); o.writeLong(off)
-        o.writeInt(-1)                  // leader_epoch: not tracked
-        writeEmptyTagged(o)
-      }
-      skipTagged(r)
-      writeEmptyTagged(o)
-    }
-    skipTagged(r)
-    writeEmptyTagged(o)
-    bo.toByteArray
-  }
-
-  private def fetch(r: DataInputStream): Array[Byte] = {
-    r.readInt(); r.readInt(); r.readInt(); r.readInt() // replica/wait/min/max
-    val isolation = r.readByte()        // 0 read_uncommitted, 1 read_committed
-    val nTopics = r.readInt()
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    o.writeInt(0)                       // throttle_time_ms
-    o.writeInt(nTopics)
-    (1 to nTopics).foreach { _ =>
-      val name = readString(r)
-      val nParts = r.readInt()
-      writeString(o, name)
-      o.writeInt(nParts)
-      (1 to nParts).foreach { _ =>
-        val p = r.readInt(); val fetchOffset = r.readLong(); r.readInt()
-        // LSO first: lastStable() reaps expired transactions, which can
-        // APPEND abort markers — reading the high watermark before the reap
-        // could publish a protocol-inconsistent (lso > hw) response pair
-        val lso = lastStable(p)
-        val hw = endOffset(p)
-        // a read_committed fetch never serves past the LSO — records of a
-        // still-open transaction are not yet decided
-        val end = if (isolation == 1) lso else hw
-        // a fetch below the log-start offset (DeleteRecords truncation)
-        // answers OFFSET_OUT_OF_RANGE like a real broker whose segments
-        // are gone — the consumer must reset, not silently skip
-        val oor = fetchOffset < logStartOffset(p)
-        o.writeInt(p); o.writeShort(if (oor) 1 else 0)
-        o.writeLong(hw)                 // high watermark
-        o.writeLong(lso)                // last stable offset
-        // only spans whose MARKER is at or beyond the fetch offset — a
-        // span the consumer's scan position has already passed must not be
-        // re-served, or its producer's later committed data would be hidden
-        val aborted =
-          if (isolation == 1)
-            abortedOf(p).synchronized {
-              abortedOf(p).toVector.filter(_._3 >= fetchOffset)
-            }
-          else Vector.empty
-        o.writeInt(aborted.size)
-        aborted.foreach { case (pid, first, _) =>
-          o.writeLong(pid); o.writeLong(first)
-        }
-        val recordSet =
-          if (oor || fetchOffset >= end) Array.emptyByteArray
-          else encodeBatch(p, fetchOffset, math.min(end, fetchOffset + batchRecords))
-        o.writeInt(recordSet.length)
-        o.write(recordSet)
-      }
-    }
-    bo.toByteArray
-  }
-
   // ---- KIP-227 incremental fetch sessions -----------------------------------
   /** One cached fetch session: the broker-side partition state an
     * incremental fetch request delta-updates instead of restating. */
@@ -1707,60 +1339,49 @@ final class KafkaLogServer(dir: String, topic: String,
   def evictFetchSessions(): Unit =
     fetchSessions.synchronized { fetchSessions.clear() }
 
-  /** Fetch over the flexible v12 frame — same record sets, LSO gating and
-    * aborted-transaction lists as [[fetch]], re-framed per KIP-482
-    * (session fields, leader-epoch fields, compact topic/partition arrays,
-    * COMPACT_NULLABLE_BYTES record sets, tagged buffers). Speaks the full
-    * KIP-227 session protocol: sessionless (epoch -1), full fetch opening
-    * a session (epoch 0 → a fresh session id), and INCREMENTAL fetches
-    * (epoch n must match; partitions in the request update the cached
-    * state, forgotten ones leave it, and the response carries ONLY the
-    * session partitions that have data — the bandwidth shape of KIP-227).
-    * A missing session answers FETCH_SESSION_ID_NOT_FOUND (70), a stale
-    * epoch INVALID_FETCH_SESSION_EPOCH (71) — both top-level, both the
-    * signals a real client takes as "fall back to a full fetch". */
-  private def fetchV12(r: DataInputStream): Array[Byte] = {
-    r.readInt(); r.readInt(); r.readInt(); r.readInt() // replica/wait/min/max
-    val isolation = r.readByte()
-    val sessionId = r.readInt()
-    val sessionEpoch = r.readInt()
+  /** Fetch (v4, or the flexible v12, which adds the KIP-227 session
+    * fields, leader-epoch fields, log_start_offset and
+    * preferred_read_replica). A read_committed fetch never serves past the
+    * LSO and lists the aborted transactions it must skip. v4 is
+    * sessionless; v12 speaks the full KIP-227 session protocol:
+    * sessionless (epoch -1), full fetch opening a session (epoch 0 → a
+    * fresh session id), and INCREMENTAL fetches (epoch n must match;
+    * partitions in the request update the cached state, forgotten ones
+    * leave it, and the response carries ONLY the session partitions that
+    * have data — the bandwidth shape of KIP-227). A missing session answers
+    * FETCH_SESSION_ID_NOT_FOUND (70), a stale epoch
+    * INVALID_FETCH_SESSION_EPOCH (71) — both top-level, both the signals a
+    * real client takes as "fall back to a full fetch". */
+  private def fetch(r: WireReader, o: WireWriter): Unit = {
+    val v = r.version
+    r.int32(); r.int32(); r.int32(); r.int32() // replica/wait/min/max
+    val isolation = r.int8()            // 0 read_uncommitted, 1 read_committed
+    val (sessionId, sessionEpoch) =
+      if (v >= 7) (r.int32(), r.int32()) else (0, -1)
     // parse the whole request first: sessions decide the response set
-    val nTopics = readCompactArrayLen(r)
-    val requested = (1 to math.max(nTopics, 0)).flatMap { _ =>
-      val name = readCompactString(r)
-      val nParts = readCompactArrayLen(r)
-      val ps = (1 to nParts).map { _ =>
-        val p = r.readInt()
-        r.readInt()                     // current_leader_epoch
-        val fetchOffset = r.readLong()
-        r.readInt()                     // last_fetched_epoch
-        r.readLong()                    // log_start_offset
-        r.readInt()                     // partition_max_bytes
-        skipTagged(r)                   // partition tags
+    val requested = r.array {
+      val name = r.string()
+      val ps = r.array {
+        val p = r.int32()
+        if (v >= 9) r.int32()           // current_leader_epoch
+        val fetchOffset = r.int64()
+        if (v >= 12) r.int32()          // last_fetched_epoch
+        if (v >= 5) r.int64()           // log_start_offset
+        r.int32()                       // partition_max_bytes
+        r.tags()
         ((name, p), fetchOffset)
       }
-      skipTagged(r)                     // topic tags
+      r.tags()
       ps
-    }
-    val forgotten = readCompactArrayLen(r) match { // forgotten_topics_data
-      case n if n > 0 => (1 to n).flatMap { _ =>
-        val name = readCompactString(r)
-        val m = readCompactArrayLen(r)
-        val ps = (1 to m).map(_ => (name, r.readInt()))
-        skipTagged(r)
+    }.flatten
+    val forgotten =
+      if (v >= 7) r.array {             // forgotten_topics_data
+        val name = r.string()
+        val ps = r.array((name, r.int32()))
+        r.tags()
         ps
-      }
-      case _ => Nil
-    }
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    def errorResponse(code: Short): Array[Byte] = {
-      o.writeInt(0)                     // throttle_time_ms
-      o.writeShort(code)
-      o.writeInt(0)                     // session_id
-      writeCompactArrayLen(o, 0)        // no topics
-      writeEmptyTagged(o)
-      bo.toByteArray
-    }
+      }.flatten
+      else Nil
     // (answer set, session id to echo, incremental?) per the session rules
     val resolved: Either[Short, (Seq[((String, Int), Long)], Int, Boolean)] =
       if (sessionEpoch == -1) Right((requested, 0, false))
@@ -1781,17 +1402,29 @@ final class KafkaLogServer(dir: String, topic: String,
           }
         }
       }
+    o.int32(0)                          // throttle_time_ms
     resolved match {
-      case Left(code) => errorResponse(code)
+      case Left(code) =>
+        o.int16(code).int32(0)          // error_code, session_id
+        o.arrayLen(0).tags()            // no topics
       case Right((answerSet, echoSessionId, incremental)) =>
         // evaluate every partition, then (incremental only) omit the empty
         // ones — a full fetch restates everything, KIP-227's response rule
         val answers = answerSet.map { case ((name, p), fetchOffset) =>
+          // LSO first: lastStable() reaps expired transactions, which can
+          // APPEND abort markers — reading the high watermark before the
+          // reap could publish a protocol-inconsistent (lso > hw) pair
           val lso = lastStable(p)
           val hw = endOffset(p)
           val end = if (isolation == 1) lso else hw
-          // below the DeleteRecords low watermark: OFFSET_OUT_OF_RANGE
+          // a fetch below the log-start offset (DeleteRecords truncation)
+          // answers OFFSET_OUT_OF_RANGE like a real broker whose segments
+          // are gone — the consumer must reset, not silently skip
           val oor = fetchOffset < logStartOffset(p)
+          // only spans whose MARKER is at or beyond the fetch offset — a
+          // span the consumer's scan position has already passed must not
+          // be re-served, or its producer's later committed data would be
+          // hidden
           val aborted =
             if (isolation == 1 && !oor)
               abortedOf(p).synchronized {
@@ -1808,32 +1441,22 @@ final class KafkaLogServer(dir: String, topic: String,
           if (incremental)
             answers.filter(a => a._6.nonEmpty || a._5.nonEmpty || a._7)
           else answers
-        o.writeInt(0)                   // throttle_time_ms
-        o.writeShort(0)                 // top-level error_code
-        o.writeInt(echoSessionId)
-        val byTopic = included.groupBy(_._1).toSeq.sortBy(_._1)
-        writeCompactArrayLen(o, byTopic.size)
-        byTopic.foreach { case (name, parts) =>
-          writeCompactString(o, name)
-          writeCompactArrayLen(o, parts.size)
-          parts.foreach { case (_, p, hw, lso, aborted, recordSet, oor) =>
-            o.writeInt(p); o.writeShort(if (oor) 1 else 0)
-            o.writeLong(hw)
-            o.writeLong(lso)
-            o.writeLong(logStartOffset(p))
-            writeCompactArrayLen(o, aborted.size)
-            aborted.foreach { case (pid, first, _) =>
-              o.writeLong(pid); o.writeLong(first)
-              writeEmptyTagged(o)
+        if (v >= 7) o.int16(0).int32(echoSessionId) // error_code, session_id
+        o.array(included.groupBy(_._1).toSeq.sortBy(_._1)) { case (name, parts) =>
+          o.string(name)
+          o.array(parts) { case (_, p, hw, lso, aborted, recordSet, oor) =>
+            o.int32(p).int16(if (oor) 1 else 0)
+            o.int64(hw).int64(lso)
+            if (v >= 5) o.int64(logStartOffset(p))
+            o.array(aborted) { case (pid, first, _) =>
+              o.int64(pid).int64(first).tags()
             }
-            o.writeInt(-1)              // preferred_read_replica
-            writeCompactBytes(o, recordSet)
-            writeEmptyTagged(o)
+            if (v >= 11) o.int32(-1)    // preferred_read_replica
+            o.bytes(recordSet).tags()
           }
-          writeEmptyTagged(o)
+          o.tags()
         }
-        writeEmptyTagged(o)
-        bo.toByteArray
+        o.tags()
     }
   }
 
@@ -1847,78 +1470,27 @@ final class KafkaLogServer(dir: String, topic: String,
     // client simply re-fetches from the seam, like any multi-batch read
     val until = if (start < base) math.min(until0, base) else until0
     if (start >= base) return encodeTailBatches(p, start, until)
-    val recs: Seq[(Long, Array[Byte], Array[Byte], Long)] = {
-        val frames = new FrameStream(dir, p, start,
-          needKey = true, needValue = true)
-        try {
-          (start until until).map { off =>
-            frames.readFrame()
-            (off, frames.key, frames.value, frames.tsUs / 1000L)
-          }
-        } finally frames.close()
+    val frames = new FrameStream(dir, p, start, needKey = true, needValue = true)
+    val recs = try {
+      (start until until).map { off =>
+        frames.readFrame()
+        (off, frames.key, frames.value, frames.tsUs / 1000L)
       }
+    } finally frames.close()
     legacyMagic match {
-      case Some(m) => return encodeLegacySet(m, recs)
+      case Some(m) => encodeLegacySet(m, recs)
       case None =>
-    }
-    val firstTs = recs.head._4
-
-    val recBytes = new ByteArrayOutputStream()
-    val ro = new DataOutputStream(recBytes)
-    recs.foreach { case (off, k, v, tsMs) =>
-      val one = new ByteArrayOutputStream(); val oo = new DataOutputStream(one)
-      oo.writeByte(0)                   // record attributes
-      writeVarlong(oo, tsMs - firstTs)
-      writeVarint(oo, (off - start).toInt)
-      def blob(b: Array[Byte]): Unit =
-        if (b == null) writeVarint(oo, -1)
-        else { writeVarint(oo, b.length); oo.write(b) }
-      blob(k); blob(v)
-      writeVarint(oo, 0)                // headers
-      writeVarint(ro, one.size())       // record length prefix
-      ro.write(one.toByteArray)
-    }
-
-    // compress the records section exactly where real producers do: v2's
-    // compressed unit is the records bytes, header stays plaintext
-    val recordsOut: Array[Byte] =
-      if (codec == 0) recBytes.toByteArray
-      else {
-        val cb = new ByteArrayOutputStream()
-        val cs: java.io.OutputStream = codec match {
-          case 1 => new java.util.zip.GZIPOutputStream(cb)
-          case 2 => new org.xerial.snappy.SnappyOutputStream(cb)
-          case 3 => new net.jpountz.lz4.LZ4FrameOutputStream(cb)
-          case 4 => new com.github.luben.zstd.ZstdOutputStream(cb)
-          case c => throw new IllegalArgumentException(s"fake broker codec $c")
+        val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
+        o.write(encodeRecordBatchV2(recs.map { case (_, k, v, tsMs) =>
+          (k, v, tsMs) }, codec, baseOffset = start))
+        if (truncateTail) {
+          // a plausible-but-cut next batch: full header claimed, half delivered
+          o.writeLong(until)
+          o.writeInt(1000)
+          o.write(new Array[Byte](50))
         }
-        cs.write(recBytes.toByteArray); cs.close()
-        cb.toByteArray
-      }
-
-    val tail = new ByteArrayOutputStream(); val to = new DataOutputStream(tail)
-    to.writeInt(0)                      // partition leader epoch
-    to.writeByte(2)                     // magic
-    to.writeInt(0)                      // crc (client does not verify)
-    to.writeShort(codec & 0x07)         // attributes: codec bits, not control
-    to.writeInt((until - start - 1).toInt) // last offset delta
-    to.writeLong(firstTs)
-    to.writeLong(recs.last._4)
-    to.writeLong(-1L); to.writeShort(-1); to.writeInt(-1) // producer id/epoch/seq
-    to.writeInt(recs.size)
-    to.write(recordsOut)
-
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    o.writeLong(start)                  // base offset
-    o.writeInt(tail.size())             // batch length
-    o.write(tail.toByteArray)
-    if (truncateTail) {
-      // a plausible-but-cut next batch: full header claimed, half delivered
-      o.writeLong(until)
-      o.writeInt(1000)
-      o.write(new Array[Byte](50))
+        bo.toByteArray
     }
-    bo.toByteArray
   }
 
   /** Serve stored produced-tail batches overlapping [start, until): whole
@@ -2006,11 +1578,7 @@ final class KafkaLogServer(dir: String, topic: String,
         innerSet.write(message(innerOff, k, v, tsMs, 0))
       }
       val cb = new ByteArrayOutputStream()
-      val cs: java.io.OutputStream = codec match {
-        case 1 => new java.util.zip.GZIPOutputStream(cb)
-        case 2 => new org.xerial.snappy.SnappyOutputStream(cb)
-        case 3 => new net.jpountz.lz4.LZ4FrameOutputStream(cb)
-      }
+      val cs = compressed(codec, cb)
       cs.write(innerSet.toByteArray); cs.close()
       // wrapper: offset = last inner ABSOLUTE offset, value = compressed set
       message(recs.last._1, null, cb.toByteArray, recs.last._4, codec)

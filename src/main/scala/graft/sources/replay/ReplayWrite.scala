@@ -195,7 +195,7 @@ case class ReplayWriterFactory(path: String, conf: Map[String, String],
 class ReplayDataWriter(f: ReplayWriterFactory, sparkPartitionId: Int,
     taskId: Long) extends DataWriter[InternalRow] {
   private val client = new KafkaLogClient(f.path,
-    f.conf ++ Seq("graft.role" -> "producer") ++
+    f.conf ++
       f.txnBase.map(b => "transactional.id" -> s"$b-$sparkPartitionId-$taskId"))
   private var txnOpen = false
   private val buffers = Array.fill(f.partitionIds.length)(

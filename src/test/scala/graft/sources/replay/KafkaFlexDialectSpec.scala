@@ -84,7 +84,7 @@ class KafkaFlexDialectSpec extends graft.SparkSpec {
 
       // transactional producer: one committed txn, one aborted
       val prod = new KafkaLogClient(s"${broker.address}/flex",
-        Map("transactional.id" -> "flex-txn", "graft.role" -> "producer"))
+        Map("transactional.id" -> "flex-txn"))
       prod.beginTxn()
       prod.produce(0, Seq((bytes("k1"), bytes("keep-1"), 1000L),
         (null, bytes("keep-2"), 1001L)))
@@ -193,8 +193,7 @@ class KafkaFlexDialectSpec extends graft.SparkSpec {
         (0, 0, 9), (1, 0, 13), (2, 0, 8), (3, 0, 12), (10, 1, 2),
         (18, 0, 3), (19, 0, 7), (22, 0, 4), (24, 0, 3), (26, 0, 3))))
     try {
-      val c = new KafkaLogClient(s"${broker.address}/flex",
-        Map("graft.role" -> "producer"))
+      val c = new KafkaLogClient(s"${broker.address}/flex")
       c.createTopics(Seq(("flex", 1)))
       c.produce(0, Seq((null, bytes("v"), 1000L))) // unused group APIs: fine
       val e = intercept[IOException] { c.coordinator("g") }

@@ -33,8 +33,7 @@ class KafkaProduceSpec extends graft.SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("kafka-prod").toString
     val broker = new KafkaLogServer(dir, "adm", requireCreate = true)
     try {
-      val c = new KafkaLogClient(broker.clientPath,
-        Map("graft.role" -> "producer"))
+      val c = new KafkaLogClient(broker.clientPath)
       // before creation: metadata names the unknown topic loudly...
       val em = intercept[java.io.IOException](c.endOffset(0))
       assert(em.getMessage.contains("error 3"), em.getMessage)
@@ -67,8 +66,7 @@ class KafkaProduceSpec extends graft.SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("kafka-del").toString
     val broker = new KafkaLogServer(dir, "life", requireCreate = true)
     try {
-      val c = new KafkaLogClient(broker.clientPath,
-        Map("graft.role" -> "producer"))
+      val c = new KafkaLogClient(broker.clientPath)
       c.createTopics(Seq("life" -> 2))
       c.produce(0, Seq((bytes("k"), bytes("v1"), 1723700000000L)))
       c.produce(1, Seq((null, bytes("v2"), 1723700000001L)))
@@ -89,8 +87,7 @@ class KafkaProduceSpec extends graft.SparkSpec {
       assert(e2.getMessage.contains("UNKNOWN_TOPIC_OR_PARTITION"), e2.getMessage)
       // re-create: the topic exists again and is EMPTY — the pre-delete
       // records must not resurrect (real delete+recreate semantics)
-      val c2 = new KafkaLogClient(broker.clientPath,
-        Map("graft.role" -> "producer"))
+      val c2 = new KafkaLogClient(broker.clientPath)
       c2.createTopics(Seq("life" -> 2))
       assert(c2.endOffset(0) === 0L && c2.endOffset(1) === 0L,
         "re-created topic must start empty")
@@ -110,8 +107,7 @@ class KafkaProduceSpec extends graft.SparkSpec {
       "it answers OFFSET_OUT_OF_RANGE, truncation is monotonic") {
     val broker = emptyBroker("trunc")
     try {
-      val c = new KafkaLogClient(broker.clientPath,
-        Map("graft.role" -> "producer"))
+      val c = new KafkaLogClient(broker.clientPath)
       (0 until 5).foreach(i =>
         c.produce(0, Seq((bytes(s"k$i"), bytes(s"v$i"), 1723700000000L + i))))
       assert(c.endOffset(0) === 5L && c.startOffset(0) === 0L)
@@ -148,8 +144,7 @@ class KafkaProduceSpec extends graft.SparkSpec {
       "skips forward to the earliest offset instead of dying") {
     val broker = emptyBroker("dloss")
     try {
-      val p = new KafkaLogClient(broker.clientPath,
-        Map("graft.role" -> "producer"))
+      val p = new KafkaLogClient(broker.clientPath)
       (0 until 5).foreach(i =>
         p.produce(0, Seq((null, bytes(s"v$i"), 1723700000000L + i))))
       p.deleteRecords(Map(0 -> 3L))
@@ -170,8 +165,7 @@ class KafkaProduceSpec extends graft.SparkSpec {
       intercept[Exception](try fr2.readFrame() finally fr2.close())
       // truncation that swallowed the ENTIRE remaining planned range:
       // the bounded read ends gracefully (false), it does not EOF-crash
-      val p2 = new KafkaLogClient(broker.clientPath,
-        Map("graft.role" -> "producer"))
+      val p2 = new KafkaLogClient(broker.clientPath)
       p2.deleteRecords(Map(0 -> -1L)) // truncate to the high watermark
       p2.closeProducer()
       val fr3 = c.openFrames(0, 0L, needKey = false, needValue = true)
@@ -226,9 +220,9 @@ class KafkaProduceSpec extends graft.SparkSpec {
 
   test("flexible Produce v9 round-trips bit-identically to the pinned v3") {
     val dir = ReplayLog.ensureLog(spark, sf)
-    // graft.role=producer opts into the Produce negotiation (the sink's
-    // conf); the default double advertises v9 → flexible, the capped one
-    // tops out at v8 → the v3 pin. Same records, same offsets, same bytes.
+    // Produce negotiates like every other API: the default double
+    // advertises v9 → flexible, the capped one tops out at v8 → the v3
+    // pin. Same records, same offsets, same bytes.
     val flexB = new KafkaLogServer(dir, "events")
     val pinB = new KafkaLogServer(dir, "events",
       advertiseApis = Some(Seq[(Short, Short, Short)](
@@ -236,10 +230,8 @@ class KafkaProduceSpec extends graft.SparkSpec {
     try {
       val recs = (0 until 50).map(i =>
         (bytes(s"fk-$i"), bytes(s"fv-$i" * 3), 1723700001000L + i))
-      val cf = new KafkaLogClient(flexB.clientPath,
-        Map("graft.role" -> "producer"))
-      val cp = new KafkaLogClient(pinB.clientPath,
-        Map("graft.role" -> "producer"))
+      val cf = new KafkaLogClient(flexB.clientPath)
+      val cp = new KafkaLogClient(pinB.clientPath)
       val baseF = cf.produce(1, recs)
       val baseP = cp.produce(1, recs)
       assert(baseF === baseP, "both dialects must assign the same offsets")
@@ -259,7 +251,7 @@ class KafkaProduceSpec extends graft.SparkSpec {
     val broker = emptyBroker("idemflex")
     try {
       val c = new KafkaLogClient(broker.clientPath,
-        Map("enable.idempotence" -> "true", "graft.role" -> "producer"))
+        Map("enable.idempotence" -> "true"))
       assert(c.produce(0,
         (0 until 10).map(i => (bytes(s"k$i"), bytes(s"v$i"), 1000L + i))) === 0L)
       broker.dropProduceResponses = 1

@@ -32,7 +32,7 @@ class KafkaTxnSpec extends graft.SparkSpec {
 
   private def producer(broker: KafkaLogServer, txnId: String) =
     new KafkaLogClient(broker.clientPath,
-      Map("transactional.id" -> txnId, "graft.role" -> "producer"))
+      Map("transactional.id" -> txnId))
 
   /** Drain partition `p` with the bounded gap-tolerant cursor, returning
     * (offset, value-string) pairs — exactly how the DSv2 reader consumes. */
@@ -257,7 +257,7 @@ class KafkaTxnSpec extends graft.SparkSpec {
     val broker = emptyBroker("txnt")
     try {
       val a = new KafkaLogClient(broker.clientPath,
-        Map("transactional.id" -> "slow", "graft.role" -> "producer",
+        Map("transactional.id" -> "slow",
           "transaction.timeout.ms" -> "300"))
       a.beginTxn()
       a.produce(0, Seq((null, bytes("stuck1"), 1000L),
